@@ -38,11 +38,13 @@ final class Pipeline(
 
   /** Resolve all components, fail-fast, in the reference's strict order.
     * Calling build() twice is an error (it would duplicate the processor
-    * chain).
+    * chain). Local checkpoint and sink I/O goes through
+    * [[graft.io.LocalFs]].
     */
   def build(): this.type = {
     if (sourceDf.nonEmpty)
       throw new IllegalStateException("Pipeline is already built.")
+    graft.io.LocalFs.install(spark)
     sourceDf = Some(Sources.create(spark, config.source, streaming))
     procs ++= config.processors.map(pc =>
       ProcessorRegistry.resolve(spark, pc.className, pc.params))

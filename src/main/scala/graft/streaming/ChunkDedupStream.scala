@@ -31,6 +31,7 @@ object ChunkDedupStream {
     */
   def ingest(spark: SparkSession, srcDir: String, outDir: String,
              checkpointDir: String): StreamingQuery = {
+    graft.io.LocalFs.install(spark)
     val docs = spark.readStream
       .schema(CurationStream.docSchema).parquet(srcDir)
     newChunks(docs).writeStream

@@ -41,6 +41,7 @@ object CurationStream {
     */
   def ingest(spark: SparkSession, srcDir: String, outDir: String,
              checkpointDir: String): StreamingQuery = {
+    graft.io.LocalFs.install(spark)
     val docs = spark.readStream.schema(docSchema).parquet(srcDir)
     curate(docs).writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>

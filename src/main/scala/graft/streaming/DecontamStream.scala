@@ -45,6 +45,7 @@ object DecontamStream {
   def ingest(spark: SparkSession, srcDir: String, bench: DataFrame,
              outDir: String, rejectDir: String,
              checkpointDir: String): StreamingQuery = {
+    graft.io.LocalFs.install(spark)
     val docs = spark.readStream.schema(CurationStream.docSchema)
       .parquet(srcDir)
     docs.writeStream

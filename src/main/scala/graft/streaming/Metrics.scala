@@ -1,16 +1,18 @@
 package graft.streaming
 
 import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.{StateOperatorProgress, StreamingQueryListener}
 
 /** Streaming observability: a [[StreamingQueryListener]] that collects
-  * per-batch progress (rows read, processing rate, batch duration, state
-  * rows) for every query on the session — the operational surface a
-  * production pipeline exports to its metrics system. The reference logs
-  * lifecycle events through its logger; on Spark the idiomatic form is
-  * the listener bus, which sees EVERY query without instrumenting any.
+  * per-batch progress (rows read, processing rate, batch duration and its
+  * phases, state rows, state commit time and memory) for every query on
+  * the session — the operational surface a production pipeline exports
+  * to its metrics system. The reference logs lifecycle events through
+  * its logger; on Spark the idiomatic form is the listener bus, which
+  * sees EVERY query without instrumenting any.
   *
   * Scale note: listeners run on the driver's listener bus and receive
   * one event per micro-batch (not per row), so collection cost is
@@ -18,13 +20,28 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   */
 object Metrics {
 
+  /** One micro-batch's progress. `durationMs` is the whole trigger; the
+    * `*Ms` phases are its breakdown (a phase the batch skipped is 0):
+    * source offsets, batch resolution, planning, the offset-log write
+    * ahead, the sink write, and the commit-log write. The state fields sum
+    * over the query's stateful operators and, like Spark's own progress,
+    * over their partitions: `stateCommitMs` is task time, not wall time.
+    */
   final case class BatchProgress(
       queryName: String,
       batchId: Long,
       numInputRows: Long,
       processedRowsPerSecond: Double,
       durationMs: Long,
-      stateRows: Long)
+      stateRows: Long,
+      latestOffsetMs: Long,
+      getBatchMs: Long,
+      queryPlanningMs: Long,
+      walCommitMs: Long,
+      addBatchMs: Long,
+      commitOffsetsMs: Long,
+      stateCommitMs: Long,
+      stateMemoryBytes: Long)
 
   /** Attach a fresh collector to the session's stream listener bus.
     * Detach with [[SparkSession]]`.streams.removeListener(collector.listener)`.
@@ -41,8 +58,13 @@ object Metrics {
     */
   private val MaxRetained = 10000
 
-  final class Collector {
+  /** The bound is fixed for callers; tests size it down. */
+  final class Collector private[streaming] (maxRetained: Int) {
+    def this() = this(MaxRetained)
+
     private val q = new ConcurrentLinkedQueue[BatchProgress]()
+    /** `q`'s length: `ConcurrentLinkedQueue.size` walks the whole queue. */
+    private val retained = new AtomicInteger
 
     val listener: StreamingQueryListener = new StreamingQueryListener {
       override def onQueryStarted(
@@ -50,17 +72,25 @@ object Metrics {
       override def onQueryProgress(
           e: StreamingQueryListener.QueryProgressEvent): Unit = {
         val p = e.progress
-        val stateRows =
-          if (p.stateOperators == null) 0L
-          else p.stateOperators.map(_.numRowsTotal).sum
+        def ms(phase: String) = Option(p.durationMs.get(phase)).map(_.longValue).getOrElse(0L)
+        val ops = Option(p.stateOperators).getOrElse(Array.empty[StateOperatorProgress])
         q.add(BatchProgress(
           Option(p.name).getOrElse(""),
           p.batchId,
           p.numInputRows,
           p.processedRowsPerSecond,
-          Option(p.durationMs.get("triggerExecution")).map(_.longValue).getOrElse(0L),
-          stateRows))
-        while (q.size > MaxRetained) q.poll()
+          ms("triggerExecution"),
+          ops.map(_.numRowsTotal).sum,
+          ms("latestOffset"),
+          ms("getBatch"),
+          ms("queryPlanning"),
+          ms("walCommit"),
+          ms("addBatch"),
+          ms("commitOffsets"),
+          ops.map(_.commitTimeMs).sum,
+          ops.map(_.memoryUsedBytes).sum))
+        if (retained.incrementAndGet() > maxRetained && q.poll() != null)
+          retained.decrementAndGet()
       }
       override def onQueryTerminated(
           e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()

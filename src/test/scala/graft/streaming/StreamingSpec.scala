@@ -545,6 +545,50 @@ class StreamingSpec extends SparkSpec {
     } finally spark.streams.removeListener(collector.listener)
   }
 
+  test("Metrics collector records the duration breakdown and state-store " +
+       "commit time and memory, bounded by the trigger, and retains the newest") {
+    implicit val ctx = spark.sqlContext
+    val all = graft.streaming.Metrics.attach(spark)
+    val newest = new graft.streaming.Metrics.Collector(2)
+    spark.streams.addListener(newest.listener)
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions").toLong
+    try {
+      val in = MemoryStream[String]
+      val q = in.toDF().dropDuplicates("value").writeStream.format("memory")
+        .queryName("metrics_breakdown").outputMode("append")
+        .option("checkpointLocation", tmpDir("metrics_ckpt")).start()
+      withQuery(q) {
+        for (batch <- Seq(Seq("a", "b", "a"), Seq("b", "c"), Seq("d"))) {
+          in.addData(batch: _*)
+          q.processAllAvailable()
+        }
+      }
+      var tries = 0
+      def mine = all.snapshot.filter(p => p.queryName == "metrics_breakdown" && p.numInputRows > 0)
+      // the listener bus hands each event to `all` before `newest`
+      def settled = mine.size >= 3 && newest.snapshot.lastOption == all.snapshot.lastOption
+      while (!settled && tries < 50) { Thread.sleep(100); tries += 1 }
+      assert(mine.map(_.batchId) === Seq(0L, 1L, 2L), mine.toString)
+      assert(mine.map(_.stateRows) === Seq(2L, 3L, 4L))
+      for (p <- mine) {
+        val phases = Seq(p.latestOffsetMs, p.getBatchMs, p.queryPlanningMs, p.walCommitMs,
+          p.addBatchMs, p.commitOffsetsMs)
+        assert(phases.forall(_ >= 0L), p.toString)
+        assert(phases.sum <= p.durationMs, p.toString)
+        // summed over the state partitions, which commit in parallel
+        assert(p.stateCommitMs >= 0L && p.stateCommitMs <= p.durationMs * partitions, p.toString)
+        assert(p.stateMemoryBytes > 0L && p.stateMemoryBytes < (64L << 20), p.toString)
+      }
+      // a stateful batch plans, writes ahead, runs the sink and commits
+      assert(mine.forall(p => p.walCommitMs + p.addBatchMs + p.commitOffsetsMs > 0L), mine.toString)
+      // the bounded collector holds exactly the last two events the full one saw
+      assert(newest.snapshot === all.snapshot.takeRight(2))
+    } finally {
+      spark.streams.removeListener(all.listener)
+      spark.streams.removeListener(newest.listener)
+    }
+  }
+
   test("B5 bounded drain: Trigger.AvailableNow reads everything then terminates") {
     val inDir = tmpDir("drain_in")
     Seq(("k1", "v1"), ("k2", "v2"), ("k3", "v3")).toDF("key", "value")
