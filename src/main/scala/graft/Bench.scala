@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.MapType
 import java.nio.file.{Files, Paths}
@@ -126,25 +126,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val (load0, mem0, steal0) = (loadAvg(), memAvailMb(), stealTicks())
     val wall0 = System.nanoTime()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // wide MinHash signature aggregate: keep whole-stage codegen on
-      // past the default 100-field limit (graft.ops.llm.Dedup).
-      .config("spark.sql.codegen.maxFields", "220")
-      // the session-lived memoized pins (suffix index, span/winnow
-      // frames) stay resident for ~150 queries of the sweep; the
-      // protected-storage floor decides whether they squeeze execution
-      // memory (default 0.5) or spill to disk under pressure
-      // (MEMORY_AND_DISK localCheckpoint blocks are eviction-safe).
-      // Exposed for A/B: SPARK_GRAFT_STORAGE_FRACTION.
-      .config("spark.memory.storageFraction",
-        sys.env.getOrElse("SPARK_GRAFT_STORAGE_FRACTION", "0.5"))
-      .getOrCreate()
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
     // Warmup: run the flagship once so the first timed query doesn't absorb
     // JVM/codegen/parquet-reader initialization (VERDICT r1 noted the first
@@ -162,18 +144,10 @@ object Bench {
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
     val results = selected.map { case (name, fn) =>
-      // Per-query debris sweep (VERDICT r4 #2): 191 queries in one JVM
-      // accumulate cached plans, localCheckpoint RDD blocks, and pending
-      // broadcasts; late-alphabet queries otherwise inherit 150 queries
-      // of storage-memory pressure (the mechanism behind the r4
-      // llm_winnow_pairs 78× official-vs-isolated anomaly).
-      spark.catalog.clearCache()
-      // ... but never the session-lived cache pins (SuffixIndex): those
-      // are lineage-truncated, so unpersisting them doesn't free-and-
-      // recompute, it BREAKS every later query holding the cached frame.
-      spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => graft.state.Materialize.isRetained(id) }
-        .values.foreach(_.unpersist(blocking = false))
+      // Per-query debris sweep (VERDICT r4 #2: without it, inherited
+      // storage pressure caused the r4 llm_winnow_pairs 78×
+      // official-vs-isolated anomaly).
+      graft.state.Materialize.sweepDebris(spark)
       val times = (1 to reps).flatMap { _ =>
         // Drain the async cleanup backlog (shuffle files, broadcasts) from
         // prior queries before timing: 60 queries in one JVM otherwise

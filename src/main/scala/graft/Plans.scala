@@ -1,27 +1,64 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.ExplainMode
 import java.nio.file.{Files, Paths}
 
-/** PLANS.md generator: the physical operator tree of every gated query at
-  * sf0.001 (plan SHAPE is the audit target, not size). Re-run each round
-  * so the committed dump never drifts from the code:
+/** The plan-dump tool, in two forms.
   *
-  *   sbt "runMain graft.Plans"             # writes PLANS.md
-  *   sbt "runMain graft.Plans <sf> <out>"
+  *   sbt "runMain graft.Plans [sfDir] [out]"       # writes PLANS.md
+  *   sbt "runMain graft.Plans capture <outDir> <suffix> [q1,q2,...] [sfDir]"
+  *
+  * The default form writes the physical operator tree of every gated query
+  * at sf0.001 (plan SHAPE is the audit target, not size). Re-run it each
+  * round so the committed dump never drifts from the code.
+  *
+  * `capture` writes the `.explain("formatted")` of the named queries to
+  * `<outDir>/<query>_<suffix>.txt` (e.g. plans/r17/foo_before.txt) — the
+  * evidence a round's plan-shape claims (Exchange count, join strategy,
+  * PushedFilters/ReadSchema, WholeStageCodegen spans) are checked
+  * against; formatted mode names pushed filters and read schemas per scan,
+  * which the tree dump elides. With no query list it captures every
+  * declared query. Besides the gates it accepts `graph_pagerank_iter` and
+  * `graph_pagerank_directed_iter`, the per-iteration plans of the PageRank
+  * loops (see `Graph.iterationPlans`).
   */
 object Plans {
+  private val DefaultSf = "/root/testdata/sf0.001"
+
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val out = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.maxFields", "220")
-      .getOrCreate()
+    val spark = Session.local(4, 32)
     spark.sparkContext.setLogLevel("ERROR")
+    try args.toList match {
+      case "capture" :: rest => capture(spark, rest)
+      case rest => writePlansMd(spark, rest.headOption.getOrElse(DefaultSf),
+        rest.lift(1).getOrElse("PLANS.md"))
+    } finally spark.stop()
+  }
+
+  private def capture(spark: SparkSession, args: List[String]): Unit = {
+    require(args.length >= 2,
+      "usage: Plans capture <outDir> <suffix> [q1,q2,...] [sfDir]")
+    val outDir = Paths.get(args(0))
+    val suffix = args(1)
+    val plans: Map[String, (SparkSession, String) => DataFrame] =
+      SparkEntry.queries ++ graft.ops.Graph.iterationPlans
+    val names: Seq[String] = args.lift(2).filter(_.nonEmpty)
+      .map(_.split(",").map(_.trim).toSeq)
+      .getOrElse(SparkEntry.queries.keys.toSeq.sorted)
+    val sfDir = args.lift(3).getOrElse(DefaultSf)
+    Files.createDirectories(outDir)
+    names.foreach { name =>
+      val fn = plans.getOrElse(name, sys.error(s"unknown query: $name"))
+      val txt =
+        try fn(spark, sfDir).queryExecution
+          .explainString(ExplainMode.fromString("formatted"))
+        catch { case e: Throwable => s"<explain failed: ${e.getMessage}>" }
+      Files.writeString(outDir.resolve(s"${name}_$suffix.txt"), txt)
+      println(s"[plans] $name -> ${name}_$suffix.txt")
+    }
+  }
+
+  private def writePlansMd(spark: SparkSession, sfDir: String, out: String): Unit = {
     val sb = new StringBuilder
     sb ++= "# PLANS — physical operator trees for every gated query\n\n"
     sb ++= "Generated at sf0.001 (plan shape, not size, is the audit target).\n"
@@ -61,6 +98,5 @@ object Plans {
     }
     Files.writeString(Paths.get(out), sb.toString)
     println(s"[plans] wrote $out")
-    spark.stop()
   }
 }

@@ -1,26 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts is parquet timestamp[ns], which Spark 4 refuses to read
-      // as a timestamp; read it as a raw nanosecond long instead
-      // (Tables.events re-derives a µs timestamp column). SURVEY.md §7 risk 1.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the 128-wide MinHash signature aggregate exceeds the default
-      // whole-stage-codegen field limit (100) — raise it so wide
-      // aggregates stay codegen'd (graft.ops.llm.Dedup).
-      .config("spark.sql.codegen.maxFields", "220")
-      .getOrCreate()
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // SPARK_GRAFT_MATERIALIZE=reliable runs the whole sweep with
     // checkpoint() materialization (the 100 TB executor-loss-safe
     // mode) instead of localCheckpoint — the VERDICT r9 #2 fleet
@@ -41,12 +26,8 @@ object Verify {
       // Same per-query debris sweep as Bench: with stage-boundary pins in
       // the query paths (r17), a full 252-query dump would otherwise
       // accumulate every query's localCheckpoint blocks for the whole
-      // sweep. Session-lived memoized pins (SuffixIndex) are retained —
-      // unpersisting a lineage-truncated frame breaks later consumers.
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => graft.state.Materialize.isRetained(id) }
-        .values.foreach(_.unpersist(blocking = false))
+      // sweep.
+      graft.state.Materialize.sweepDebris(spark)
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

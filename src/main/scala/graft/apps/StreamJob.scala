@@ -1,6 +1,5 @@
 package graft.apps
 
-import org.apache.spark.sql.SparkSession
 import graft.pipeline.Pipeline
 
 /** The framework-driven job entrypoint — the twin of
@@ -32,12 +31,11 @@ object StreamJob {
     appCfg.logLevel.foreach(l =>
       graft.util.Log.setLevel(org.apache.logging.log4j.Level.valueOf(l)))
     val log = graft.util.Log.logger("apps.StreamJob")
-    val spark = SparkSession.builder()
+    val spark = graft.Session.builder()
       .appName(appCfg.appName)
       // spark-submit injects the master; the app-config master (reference
       // app_config.yaml `spark_master`) is the direct-run default
       .master(sys.props.getOrElse("spark.master", appCfg.master))
-      .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     graft.functions.GraftFunctions.register(spark)
     log.info(s"starting pipeline from ${args(0)} (batch=$batch)")
@@ -55,10 +53,9 @@ object StreamJob {
 object SampleStreamJob {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: SampleStreamJob <pipeline.yaml>")
-    val spark = SparkSession.builder()
+    val spark = graft.Session.builder()
       .appName("graft-sample-stream-job")
       .master(sys.props.getOrElse("spark.master", "local[*]"))
-      .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     val cfg = graft.config.YamlConfig.pipelineFromFile(args(0))
     // batch pre-flight (verify_kafka_connection twin): bounded read + take(1)

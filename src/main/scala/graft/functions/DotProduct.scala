@@ -79,129 +79,48 @@ case class DotProduct(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Function registration: per-session (idempotent) and the
-  * `spark.sql.extensions` injection path.
+/** The native functions, one table for both install paths: per-session
+  * [[GraftFunctions.register]] (idempotent) and [[GraftExtensions]].
   */
 object GraftFunctions {
 
-  private val info = new ExpressionInfo(classOf[DotProduct].getName, "graft_dot")
+  type Entry = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 
-  private def builder(children: Seq[Expression]): Expression = {
-    require(children.length == 2, "graft_dot expects exactly 2 arguments")
-    DotProduct(children.head, children(1))
-  }
+  private def entry(name: String, cls: Class[_ <: Expression], arity: Int)(
+      make: Seq[Expression] => Expression): Entry =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
+      (children: Seq[Expression]) => {
+        require(children.length == arity,
+          s"$name expects exactly $arity argument${if (arity == 1) "" else "s"}")
+        make(children)
+      })
 
-  private val md5Info =
-    new ExpressionInfo(classOf[Md5Hex60].getName, "graft_md5_60")
-
-  private def md5Builder(children: Seq[Expression]): Expression = {
-    require(children.length == 1, "graft_md5_60 expects exactly 1 argument")
-    Md5Hex60(children.head)
-  }
-
-  private val nfcInfo =
-    new ExpressionInfo(classOf[NfcNormalize].getName, "graft_nfc")
-
-  private def nfcBuilder(children: Seq[Expression]): Expression = {
-    require(children.length == 1, "graft_nfc expects exactly 1 argument")
-    NfcNormalize(children.head)
-  }
-
-  private val md5AtInfo =
-    new ExpressionInfo(classOf[Md5Hex60At].getName, "graft_md5_60_at")
-
-  private def md5AtBuilder(children: Seq[Expression]): Expression = {
-    require(children.length == 3, "graft_md5_60_at expects exactly 3 arguments")
-    Md5Hex60At(children.head, children(1), children(2))
-  }
-
-  private val packInfo =
-    new ExpressionInfo(classOf[PackBytes8].getName, "graft_pack8")
-
-  private def packBuilder(children: Seq[Expression]): Expression = {
-    require(children.length == 2, "graft_pack8 expects exactly 2 arguments")
-    PackBytes8(children.head, children(1))
-  }
-
-  private val bloomInfo = new ExpressionInfo(
-    classOf[BloomMightContain].getName, "graft_bloom_might_contain")
-
-  private def bloomBuilder(children: Seq[Expression]): Expression = {
-    require(children.length == 2,
-      "graft_bloom_might_contain expects exactly 2 arguments")
-    BloomMightContain(children.head, children(1))
-  }
+  val table: Seq[Entry] = Seq(
+    entry("graft_dot", classOf[DotProduct], 2)(c => DotProduct(c(0), c(1))),
+    entry("graft_md5_60", classOf[Md5Hex60], 1)(c => Md5Hex60(c(0))),
+    entry("graft_md5_60_at", classOf[Md5Hex60At], 3)(c => Md5Hex60At(c(0), c(1), c(2))),
+    entry("graft_pack8", classOf[PackBytes8], 2)(c => PackBytes8(c(0), c(1))),
+    entry("graft_nfc", classOf[NfcNormalize], 1)(c => NfcNormalize(c(0))),
+    entry("graft_bloom_might_contain", classOf[BloomMightContain], 2)(
+      c => BloomMightContain(c(0), c(1))))
 
   /** Register the native functions on a live session (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_dot"), info, builder _)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_md5_60"), md5Info, md5Builder _)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_nfc"), nfcInfo, nfcBuilder _)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_bloom_might_contain"), bloomInfo, bloomBuilder _)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_pack8"), packInfo, packBuilder _)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_md5_60_at"), md5AtInfo, md5AtBuilder _)
-  }
+  def register(spark: SparkSession): Unit =
+    table.foreach { case (id, info, builder) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
+    }
 }
 
 /** `--conf spark.sql.extensions=graft.functions.GraftExtensions` — the
   * public injection point, so any session (spark-submit, thrift server)
-  * gets the engine's native functions without code changes.
+  * gets the engine's native functions and rules without code changes.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(
-      (FunctionIdentifier("graft_dot"),
-       new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-       (children: Seq[Expression]) => {
-         require(children.length == 2, "graft_dot expects exactly 2 arguments")
-         DotProduct(children.head, children(1))
-       }))
-    ext.injectFunction(
-      (FunctionIdentifier("graft_md5_60"),
-       new ExpressionInfo(classOf[Md5Hex60].getName, "graft_md5_60"),
-       (children: Seq[Expression]) => {
-         require(children.length == 1, "graft_md5_60 expects exactly 1 argument")
-         Md5Hex60(children.head)
-       }))
-    ext.injectFunction(
-      (FunctionIdentifier("graft_md5_60_at"),
-       new ExpressionInfo(classOf[Md5Hex60At].getName, "graft_md5_60_at"),
-       (children: Seq[Expression]) => {
-         require(children.length == 3, "graft_md5_60_at expects exactly 3 arguments")
-         Md5Hex60At(children.head, children(1), children(2))
-       }))
-    ext.injectFunction(
-      (FunctionIdentifier("graft_pack8"),
-       new ExpressionInfo(classOf[PackBytes8].getName, "graft_pack8"),
-       (children: Seq[Expression]) => {
-         require(children.length == 2, "graft_pack8 expects exactly 2 arguments")
-         PackBytes8(children.head, children(1))
-       }))
-    ext.injectFunction(
-      (FunctionIdentifier("graft_nfc"),
-       new ExpressionInfo(classOf[NfcNormalize].getName, "graft_nfc"),
-       (children: Seq[Expression]) => {
-         require(children.length == 1, "graft_nfc expects exactly 1 argument")
-         NfcNormalize(children.head)
-       }))
-    ext.injectFunction(
-      (FunctionIdentifier("graft_bloom_might_contain"),
-       new ExpressionInfo(
-         classOf[BloomMightContain].getName, "graft_bloom_might_contain"),
-       (children: Seq[Expression]) => {
-         require(children.length == 2,
-           "graft_bloom_might_contain expects exactly 2 arguments")
-         BloomMightContain(children.head, children(1))
-       }))
+    GraftFunctions.table.foreach(ext.injectFunction)
     // conf-gated (default off) — injecting them costs nothing until a
     // session opts in; see ApproxDistinctRewrite / RangeJoinBandRewrite
-    ext.injectOptimizerRule(_ => ApproxDistinctRewrite)
-    ext.injectOptimizerRule(_ => RangeJoinBandRewrite)
+    Seq(ApproxDistinctRewrite, RangeJoinBandRewrite)
+      .foreach(r => ext.injectOptimizerRule(_ => r))
   }
 }

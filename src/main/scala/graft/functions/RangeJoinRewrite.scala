@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
 
@@ -41,7 +39,7 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
   * is also what makes the rewrite idempotent (its own output carries the
   * band equality).
   */
-object RangeJoinBandRewrite extends Rule[LogicalPlan] with PredicateHelper {
+object RangeJoinBandRewrite extends SessionRule with PredicateHelper {
 
   val WidthKey = "spark.graft.rangeJoin.bandWidth"
 
@@ -154,11 +152,4 @@ object RangeJoinBandRewrite extends Rule[LogicalPlan] with PredicateHelper {
       Project(j.output, newJoin)
     }
   }
-
-  /** Attach to an already-running session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(this)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
-    }
 }

@@ -29,7 +29,7 @@ import org.apache.spark.sql.internal.SQLConf
   *  - live session: [[ApproxDistinctRewrite.register]] appends to
   *    `spark.experimental.extraOptimizations`.
   */
-object ApproxDistinctRewrite extends Rule[LogicalPlan] {
+object ApproxDistinctRewrite extends SessionRule {
 
   val ConfKey = "spark.graft.approxCountDistinct.enabled"
   val RsdKey  = "spark.graft.approxCountDistinct.rsd"
@@ -53,6 +53,10 @@ object ApproxDistinctRewrite extends Rule[LogicalPlan] {
           }
       }
     }
+}
+
+/** An optimizer rule that can also attach itself to a running session. */
+trait SessionRule extends Rule[LogicalPlan] {
 
   /** Attach to an already-running session (idempotent). */
   def register(spark: SparkSession): Unit =

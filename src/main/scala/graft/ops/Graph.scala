@@ -376,6 +376,38 @@ object Graph extends QueryPack {
       .orderBy($"r".desc, $"node").limit(50)
   }
 
+  /** One PageRank iteration over the loop state [[pagerankFrom]] and
+    * [[pagerankDirectedFrom]] build, keyed by the names `graft.Plans
+    * capture` accepts. The loops run eagerly (pin cadence), so a plan dump
+    * of the gate shows only the final pin scan; the per-iteration plan,
+    * where the exchanges live, is this step's.
+    */
+  private[graft] val iterationPlans: Map[String, (SparkSession, String) => DataFrame] = Map(
+    "graph_pagerank_iter" -> { (spark, dir) =>
+      import spark.implicits._
+      val pin = graft.state.Materialize.pin _
+      val e = edgesAt(spark, dir, 45)
+      val u = e.select($"a".as("w1"), $"b".as("w2"))
+        .union(e.select($"b".as("w1"), $"a".as("w2"))).transform(pin)
+      val r0 = u.groupBy($"w1")
+        .agg(count(lit(1)).as("out_w"))
+        .select($"w1".as("node"), $"out_w", lit(1000000L).as("r"))
+        .transform(pin)
+      prStep(u, r0.select($"node", lit(0L).as("c"), $"out_w".as("ow")), r0)
+    },
+    "graph_pagerank_directed_iter" -> { (spark, dir) =>
+      import spark.implicits._
+      val pin = graft.state.Materialize.pin _
+      val ed = edgesAt(spark, dir, 45).select($"a".as("w1"), $"b".as("w2"))
+        .transform(pin)
+      val outw = ed.groupBy($"w1").agg(count(lit(1)).as("out_w"))
+      val nodes = ed.select($"w1".as("node"))
+        .union(ed.select($"w2".as("node"))).distinct().transform(pin)
+      val n = nodes.count()
+      val nodesF = prDirNodesFlagged(nodes, outw).transform(pin)
+      prDirStep(ed, n, nodesF.withColumn("r", lit(1000000L)).transform(pin))
+    })
+
   /** K-hop ego-network census (K = 8) from the graph's minimum vertex —
     * the neighborhood-size profile feature engineering extracts per
     * entity (how many vertices are reachable within 1, 2, … hops). Exact

@@ -615,7 +615,7 @@ object Tpch extends QueryPack {
   }
 
   /** [[q21WaitingOrders]] over any (lineitem, orders, supplier-dim)
-    * triple — the scale-probe entry ([[ScaleProbeRel]]).
+    * triple — the scale-probe entry (`ScaleProbeRel`).
     *
     * Form: ONE per-order aggregate (distinct suppliers, distinct
     * R-suppliers) replaces both correlated subqueries — "exists another
@@ -623,7 +623,7 @@ object Tpch extends QueryPack {
     * n_r_supp = 1 (l1's own line is R, so it contributes the 1). The
     * naive EXISTS/NOT EXISTS translation ([[waitingOrdersSemiAntiFrom]])
     * probes the FULL fact twice (semi + anti build sides = every
-    * lineitem row); measured at 10× sf0.1 ([[ScaleProbeRel]], identical
+    * lineitem row); measured at 10× sf0.1 (`ScaleProbeRel`, identical
     * output proven in-run) it degrades 8.2× (3.1s → 25.2s) while this
     * aggregate form grows 1.9× (4.1s → 7.6s) for 10× the data — the
     * order-keyed aggregate output is |orders|, not |lineitem|, and every

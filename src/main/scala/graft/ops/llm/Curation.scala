@@ -520,7 +520,7 @@ object Curation extends QueryPack {
     curationFunnelFrom(Tables.documents(spark, dir))
 
   /** [[curationFunnel]] over any (doc_id, lang, text, n_chars) corpus —
-    * also the [[ScaleProbe]] entry.
+    * also the `ScaleProbe` entry.
     */
   /** The funnel's quality-scoring stage alone (adds ws/n_tokens/score/
     * qual): map-side only, so the STREAMING ingest path

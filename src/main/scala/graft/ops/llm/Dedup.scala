@@ -758,7 +758,7 @@ object Dedup extends QueryPack {
   }
 
   /** The LSH banding subtree of [[nearDupPairs]] — (doc_id, band, bucket),
-    * 32 rows per doc — factored out so [[PairCountProbe]] can measure
+    * 32 rows per doc — factored out so `PairCountProbe` can measure
     * bucket-size distribution (candidate fanout = Σ C(size,2) per group)
     * without re-deriving the pipeline.
     *
@@ -916,7 +916,7 @@ object Dedup extends QueryPack {
     * bit_count(xor).
     */
   /** The pinned per-doc 32-bit SimHash signature frame — factored out
-    * (r18) so [[PairCountProbe]] can census the banding-key
+    * (r18) so `PairCountProbe` can census the banding-key
     * distribution over the exact production frame (VERDICT r17 #5).
     */
   private[llm] def simhashSignatures(spark: SparkSession,
@@ -1179,7 +1179,7 @@ object Dedup extends QueryPack {
     * rows/2^16 cells and therefore CONSTANT expected occupancy: the
     * within-cell pairwise verify is O(occ) per vector and the coarse
     * assignment O(K·dim) per vector — the classic IVF trade, with the
-    * occupancy-held flatness measured in [[ScaleProbe]]'s
+    * occupancy-held flatness measured in `ScaleProbe`'s
     * `weak-ann-kheld-*` rungs.
     */
   val IvfCellsKey = "spark.graft.ivf.cells"
@@ -1495,7 +1495,7 @@ object Dedup extends QueryPack {
 
   /** The cell-shuffle pair engine behind [[dedupEmbedding]], over any
     * `(vec_id, v, nrm)` corpus — factored out so the scale probe
-    * ([[ScaleProbe]]) can drive it with multiplied corpora.
+    * (`ScaleProbe`) can drive it with multiplied corpora.
     *
     * `withCentroidCos = true` additionally emits each member's cosine to
     * its OWN cell centroid (`ci`, `cj`) — the SemDeDup keep quantity —
@@ -1858,7 +1858,7 @@ object Dedup extends QueryPack {
     paraDedupFrom(Tables.documents(spark, dir))
 
   /** [[paraDedup]] over any (doc_id, text) corpus — also the entry point
-    * [[ScaleProbe]] drives at multiplied corpus sizes.
+    * `ScaleProbe` drives at multiplied corpus sizes.
     */
   def paraDedupFrom(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
@@ -2022,7 +2022,7 @@ object Dedup extends QueryPack {
   }
 
   /** [[substringSpans]] over any (doc_id, text) corpus — also the
-    * [[ScaleProbe]] entry.
+    * `ScaleProbe` entry.
     */
   def substringSpansFrom(docs: DataFrame): DataFrame =
     spansReport(dupSpans(docs))

@@ -464,7 +464,7 @@ object Similarity extends QueryPack {
   private[llm] def pqModel(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
     pqModelFrom(corpus(spark, dir))
 
-  /** [[pqModel]] over any (vec_id, v) corpus — also the [[ScaleProbe]]
+  /** [[pqModel]] over any (vec_id, v) corpus — also the `ScaleProbe`
     * entry.
     */
   private[llm] def pqModelFrom(n: DataFrame, keep: Seq[String] = Nil): (DataFrame, DataFrame) = {
@@ -543,7 +543,7 @@ object Similarity extends QueryPack {
   def pqAdc(spark: SparkSession, dir: String): DataFrame =
     pqAdcFrom(corpus(spark, dir))
 
-  /** [[pqAdc]] over any (vec_id, v) corpus — also the [[ScaleProbe]]
+  /** [[pqAdc]] over any (vec_id, v) corpus — also the `ScaleProbe`
     * entry.
     */
   private[llm] def pqAdcFrom(n: DataFrame): DataFrame = {

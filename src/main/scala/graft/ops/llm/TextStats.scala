@@ -320,7 +320,7 @@ object TextStats extends QueryPack {
     winnowReport(winnowSelForDir(spark, dir))
 
   /** [[winnowFingerprint]] over any (doc_id, text) corpus — also the
-    * [[ScaleProbe]] entry. Un-memoized (laws/probes need fresh builds);
+    * `ScaleProbe` entry. Un-memoized (laws/probes need fresh builds);
     * the dir-keyed gates share [[winnowSelForDir]]'s frame instead.
     */
   def winnowFrom(docs: DataFrame): DataFrame =
@@ -407,7 +407,7 @@ object TextStats extends QueryPack {
   }
 
   /** The selected (doc_id, wmin) fingerprint set — the inverted-index
-    * universe of [[winnowPairsFrom]] — exposed for [[PairCountProbe]]'s
+    * universe of [[winnowPairsFrom]] — exposed for `PairCountProbe`'s
     * df-distribution telemetry.
     */
   private[ops] def winnowSelected(docs: DataFrame): DataFrame = {
@@ -433,7 +433,7 @@ object TextStats extends QueryPack {
     winnowPairsCoreSel(winnowSelForDir(spark, dir), _ => 50L)
 
   /** [[winnowPairs]] over any (doc_id, text) corpus — also the
-    * [[ScaleProbe]] entry. Cap pinned at 50 for oracle parity.
+    * `ScaleProbe` entry. Cap pinned at 50 for oracle parity.
     */
   def winnowPairsFrom(docs: DataFrame): DataFrame =
     winnowPairsCore(docs, _ => 50L)

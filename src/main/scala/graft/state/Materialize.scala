@@ -75,6 +75,20 @@ object Materialize {
     case _ => true
   }
 
+  /** The debris sweep between independent queries (Bench, Verify, the
+    * scale probes): many queries in one JVM otherwise accumulate cached
+    * plans and localCheckpoint blocks, and late queries inherit the
+    * storage-memory pressure of every earlier one. Retained pins are
+    * spared: they are lineage-truncated, so unpersisting them would not
+    * free-and-recompute but break every later query holding the frame.
+    */
+  def sweepDebris(spark: org.apache.spark.sql.SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs
+      .filterNot { case (id, _) => isRetained(id) }
+      .values.foreach(_.unpersist(blocking = false))
+  }
+
   private val retainLock = new Object
 
   /** [[pin]], additionally marking the newly-persisted RDD ids as

@@ -8,14 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * cluster session would be used).
   */
 object SparkSpec {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-tests")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.local(4)
 }
 
 abstract class SparkSpec extends AnyFunSuite {

@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.SparkSpec
+import org.apache.spark.sql.GraftTestAccess
 import org.apache.spark.sql.functions._
 
 /** The native graft_dot expression: value-exactness vs the HOF fold
@@ -55,8 +56,14 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("GraftExtensions injects the function via spark.sql.extensions") {
-    val ext = new GraftExtensions()
     val exts = new org.apache.spark.sql.SparkSessionExtensions
-    ext.apply(exts) // must not throw; full builder path needs a new session
+    new GraftExtensions().apply(exts)
+    assert(GraftTestAccess.injectedFunctionNames(exts).sorted === Seq(
+      "graft_bloom_might_contain", "graft_dot", "graft_md5_60",
+      "graft_md5_60_at", "graft_nfc", "graft_pack8"))
+    assert(GraftTestAccess.injectedFunctionNames(exts).sorted ===
+      GraftFunctions.table.map(_._1.funcName).sorted)
+    assert(GraftTestAccess.injectedOptimizerRules(exts, spark) ===
+      Seq(ApproxDistinctRewrite, RangeJoinBandRewrite))
   }
 }

@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import java.util.concurrent.atomic.{AtomicLong, LongAdder}
 
@@ -24,14 +23,7 @@ object ScalingProbe {
     require(args.length >= 2, "usage: ScalingProbe <cores> <partitions> [sfDir]")
     val (cores, parts) = (args(0).toInt, args(1).toInt)
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", parts.toString)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.maxFields", "220")
-      .getOrCreate()
+    val spark = graft.Session.local(cores, parts)
     spark.sparkContext.setLogLevel("ERROR")
     val tasks = new AtomicLong
     val runMs, gcMs, deserMs, schedMs = new LongAdder

@@ -1,7 +1,6 @@
 package graft.ops.llm
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measured-scale probe for the embedding cell-shuffle dedup: multiplies
@@ -37,14 +36,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val mult = args.headOption.map(_.toInt).getOrElse(10)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     // SPARK_GRAFT_MATERIALIZE=reliable flips every Materialize.pin in
     // the probed operators to checkpoint() (files, not resident blocks)
@@ -78,15 +70,8 @@ object ScaleProbe {
     // (localCheckpoint) frames from earlier sections/sub-steps otherwise
     // occupy block storage and contaminate later timings — measured:
     // suffix-array-global at 10× read 179s with the winnow-pairs
-    // section's 2+ GiB of pins resident vs 88s swept. Retained
-    // (session-cache) pins are exempt, as in Bench. ONE spelling,
-    // shared by the section-start sweep and any mid-rung sweep.
-    def sweepDebris(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => graft.state.Materialize.isRetained(id) }
-        .values.foreach(_.unpersist(blocking = false))
-    }
+    // section's 2+ GiB of pins resident vs 88s swept.
+    def sweepDebris(): Unit = graft.state.Materialize.sweepDebris(spark)
     def probeMults(name: String, warmup: => Any): Seq[Int] =
       if (onlySections.forall(_.contains(name))) {
         sweepDebris()

@@ -3,8 +3,8 @@ package graft.state
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** The Bench debris sweep vs session-lived cache pins: the sweep
-  * unpersists every persistent RDD between queries, and a
+/** The debris sweep (`Materialize.sweepDebris`) vs session-lived cache
+  * pins: the sweep unpersists every persistent RDD between queries, and a
   * lineage-truncated (localCheckpoint) frame whose blocks are dropped is
   * NOT recomputable — the exact failure mode that broke the second
   * suffix gate when the memoized SuffixIndex landed (round 9). This
@@ -28,10 +28,8 @@ class RetainedPinSpec extends SparkSpec {
     val sweepable = persisted.keys.filterNot(Materialize.isRetained).toSet
     assert(retainedIds.nonEmpty, "pinRetained must register its RDD ids")
     assert(sweepable.nonEmpty, "plain pin must remain sweepable")
-    // the Bench sweep, verbatim
-    sc.getPersistentRDDs
-      .filterNot { case (id, _) => Materialize.isRetained(id) }
-      .values.foreach(_.unpersist(blocking = true))
+    // the sweep Bench, Verify and the scale probes run between queries
+    Materialize.sweepDebris(spark)
     val after = sc.getPersistentRDDs.keySet
     assert(retainedIds.subsetOf(after),
       "sweep must not unpersist retained cache pins")
@@ -44,7 +42,6 @@ class RetainedPinSpec extends SparkSpec {
   test("concurrent pinRetained calls each register their own ids " +
        "(the diff window is lock-confined, ADVICE r9) and all survive " +
        "the sweep") {
-    val sc = spark.sparkContext
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -52,9 +49,7 @@ class RetainedPinSpec extends SparkSpec {
       Future(Materialize.pinRetained(
         spark.range(100L * k).select($"id", ($"id" + k).as("x"))))
     }), 2.minutes)
-    sc.getPersistentRDDs
-      .filterNot { case (id, _) => Materialize.isRetained(id) }
-      .values.foreach(_.unpersist(blocking = true))
+    Materialize.sweepDebris(spark)
     frames.zipWithIndex.foreach { case (df, i) =>
       assert(df.count() === 100L * (i + 1),
         "every concurrently-retained frame must stay usable post-sweep")
