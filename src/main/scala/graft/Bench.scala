@@ -202,8 +202,7 @@ object Bench {
     val contendReason = triggers.mkString("; ")
     // the COMPACT twin line (stdout, 1800-char budget) carries a slim
     // env — the r12 trigger/rule/steal-avg/mem fields would displace
-    // ~5 more query entries from the driver's scrape window, shrinking
-    // the comparable set a tail-scrape regressGuard can recover
+    // ~5 more query entries from the 1800-char stdout scrape window
     // (self-review r12 pass 4); BENCH.json keeps the full env
     val envSlim =
       s""""env":{"load_start":$load0,"load_end":$load1,""" +
@@ -260,60 +259,27 @@ object Bench {
   }
 
   /** A chosen regression baseline: `cleanCertified` = the snapshot is
-    * certified non-contended (explicit `contended: false`, or loads
-    * below the cuts when the flag predates r11); false means every
-    * candidate was contended and the newest was used under protest.
+    * certified non-contended (explicit `contended: false`); false means
+    * every candidate was contended or unflagged and the newest was used
+    * under protest.
     */
   private[graft] final case class BaselinePick(
       round: Int, path: java.nio.file.Path, cleanCertified: Boolean)
 
   /** Was this committed snapshot's run contended? Reads the explicit
-    * `contended` flag (r11+), else derives it from the recorded loads
-    * under the current rule (pre-r11 snapshots), checking parsed.env /
-    * top-level env / the raw stdout tail. None = no run-condition data
-    * at all (r01–r04 scrape failures) — not certifiable as clean.
+    * `contended` flag (r11+) from parsed.env or the top-level env. None =
+    * no flag (pre-r11 snapshots, r01–r04 scrape failures) — not
+    * certifiable as clean.
     */
   private[graft] def snapshotContended(json: String): Option[Boolean] = {
     val node =
       try new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
       catch { case _: Throwable => return None }
-    if (node == null) return None
-    val envNode = {
-      val parsed = node.get("parsed")
-      val fromParsed =
-        if (parsed != null && parsed.isObject) parsed.get("env") else null
-      if (fromParsed != null && fromParsed.isObject) fromParsed
-      else node.get("env")
-    }
-    def fromLoads(ls: Double, le: Double) =
-      ls >= LoadStartCut || le >= LoadEndCut
-    if (envNode != null && envNode.isObject) {
-      val c = envNode.get("contended")
-      if (c != null && c.isBoolean) Some(c.asBoolean())
-      else (Option(envNode.get("load_start")).map(_.asDouble(-1)),
-            Option(envNode.get("load_end")).map(_.asDouble(-1))) match {
-        case (Some(a), Some(b)) if a >= 0 && b >= 0 => Some(fromLoads(a, b))
-        case _ => None
-      }
-    } else {
-      val tail = Option(node.get("tail")).map(_.asText("")).getOrElse("")
-      raw""""contended":(true|false)""".r.findFirstMatchIn(tail) match {
-        case Some(m) => Some(m.group(1).toBoolean)
-        case None =>
-          // trailing delimiter lookahead, same contract as the query
-          // scraper above (ADVICE r10): the tail's END boundary can cut
-          // a number mid-token ("load_end":4.74 → "load_end":4), and a
-          // truncated load read below the cut would mis-certify a
-          // contended snapshot as the clean baseline
-          val num = (key: String) =>
-            (raw""""$key":(-?\d+(?:\.\d+)?)(?=[,}])""").r
-              .findFirstMatchIn(tail).map(_.group(1).toDouble)
-          (num("load_start"), num("load_end")) match {
-            case (Some(a), Some(b)) => Some(fromLoads(a, b))
-            case _ => None
-          }
-      }
-    }
+    val env = Option(node).flatMap(n => Option(n.get("parsed")))
+      .flatMap(p => Option(p.get("env"))).filter(_.isObject)
+      .orElse(Option(node).flatMap(n => Option(n.get("env"))))
+    env.filter(_.isObject).flatMap(e => Option(e.get("contended")))
+      .filter(_.isBoolean).map(_.asBoolean())
   }
 
   /** Newest CLEAN baseline snapshot in `dir` (VERDICT r11 #1: the guard
@@ -360,9 +326,8 @@ object Bench {
     })
   }
 
-  /** Per-query times out of a committed snapshot, in all four shapes
-    * the artifacts take (factored from [[regressGuard]] so the decode
-    * is unit-testable):
+  /** Per-query times out of a committed snapshot (factored from
+    * [[regressGuard]] so the decode is unit-testable):
     *  - the driver's BENCH_r{N}.json wraps the bench line under
     *    "parsed"; BENCH.json / BENCH_clean_r{N}.json carry it directly;
     *  - "queries" as the full name→time OBJECT (committed artifacts,
@@ -377,8 +342,7 @@ object Bench {
     *    silently mislabel every entry (undecodable-but-honest beats
     *    wrong) — when no list validates, the snapshot's `top` object
     *    (the slowest few, always name-keyed) is the comparable set;
-    *  - scrape-failed snapshots: recover name:time pairs from the raw
-    *    "tail" fragment by delimiter-anchored regex.
+    *  - no decodable "queries" (the r01–r03 scrape failures): empty.
     *
     * Returns the decoded map plus an optional DEGRADED-DECODE note: a
     * positional vector that fell back to the `top` object silently
@@ -386,7 +350,7 @@ object Bench {
     * BENCH_REGRESS.md reading "24 comparable, 0 regressed" must say
     * WHY it is small or a regression in the other ~227 hides behind a
     * clean-looking report (self-review r13 pass 3 — the no-silent-caps
-    * rule).
+    * rule); an empty decode says so the same way.
     */
   private[graft] def snapshotQueries(json: String, currentNames: Seq[String],
                                      dir: java.nio.file.Path = Paths.get("."))
@@ -442,29 +406,8 @@ object Bench {
       }
       tryNames(currentNames).orElse(fromCorrectness).map((_, None))
         .getOrElse(fromTop)
-    } else {
-      val tail = Option(node.get("tail")).map(_.asText("")).getOrElse("")
-      // the tail is the LAST 2000 chars of the driver's stdout scrape:
-      // its start boundary can cut a pair mid-token, so require each
-      // match to sit between JSON delimiters — a leading `{`/`,` proves
-      // the key wasn't truncated, a trailing `,`/`}` proves the number
-      // wasn't (ADVICE r10: a boundary fragment yielded a wrong old
-      // time and a spurious >=1.5x verdict)
-      val recovered = raw"""[,{]"([A-Za-z0-9_]+)":(-?\d+\.\d+)(?=[,}])""".r
-        .findAllMatchIn(tail)
-        .map(m => m.group(1) -> m.group(2).toDouble)
-        .filterNot(m => Set("value", "load_start", "load_end",
-          "baseline_s", "suffix_index_cold_s", "span_frame_cold_s",
-          "steal_cpu_s", "steal_cores_avg", "sf")
-          .contains(m._1)).toMap
-      // This path recovers ONLY the pairs that survived the last-2000-char
-      // scrape window — a silently shrunken comparable set is the exact
-      // disclosure gap the decodeNote machinery closes for the positional
-      // fallback (advisor r13): say so, so BENCH_REGRESS.md's banner fires.
-      (recovered, Some(s"scrape-failed baseline: ${recovered.size} pairs " +
-        "recovered from a truncated 2000-char tail fragment; regressions " +
-        "in queries outside them are UNCHECKED"))
-    }
+    } else (Map.empty, Some("baseline snapshot has no decodable queries " +
+      "(scrape-failed run): nothing compared, regressions UNCHECKED"))
   }
 
   /** Compare this run's medians against the newest committed CLEAN
@@ -509,8 +452,8 @@ object Bench {
         "small run; regressions outside it are unchecked.\n\n")
       if (!cleanBase)
         md ++= "**CONTENDED BASELINE**: no committed snapshot certified " +
-          "clean (each was flagged/derived contended, or carried no " +
-          "run-condition data to certify), so the newest usable one was " +
+          "clean (each was flagged contended, or carried no contended " +
+          "flag to certify), so the newest usable one was " +
           "taken under protest — 'improved' rows below may be phantom " +
           "(the baseline was slow, not the code fast) and real " +
           "regressions may hide.\n\n"

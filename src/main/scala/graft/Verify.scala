@@ -11,7 +11,7 @@ object Verify {
     // mode) instead of localCheckpoint — the VERDICT r9 #2 fleet
     // exercise. Set ONLY when the env var is present: since r17 an
     // EXPLICIT local vetoes the loop-pin autopilot (VERDICT r16 #2),
-    // so unconditionally writing "local" here would change loopMode's
+    // so unconditionally writing "local" here would change Policy.loop's
     // semantics for the sweep instead of leaving the default.
     sys.env.get("SPARK_GRAFT_MATERIALIZE")
       .foreach(m => spark.conf.set(graft.state.Materialize.ModeKey, m))

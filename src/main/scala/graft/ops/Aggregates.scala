@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Det, Tables}
+import graft.state.Materialize.Policy
 
 /** Aggregation operators (SURVEY.md §2 C14–C20 + B-adjacent rollups).
   *
@@ -250,8 +251,8 @@ object Aggregates extends QueryPack {
     // aggregate over the counts frame instead. Pinned: shared lazily,
     // Catalyst re-expands the subtree per consumer and the scan comes
     // back (measured on heavy_hitters' first attempt).
-    val counts = graft.state.Materialize.pinIfLarge(
-      ev.groupBy($"event_type").agg(count(lit(1)).as("n")))
+    val counts = graft.state.Materialize.pin(
+      ev.groupBy($"event_type").agg(count(lit(1)).as("n")), Policy.IfLarge)
     counts
       .crossJoin(broadcast(counts.agg(sum($"n").as("_total"))))
       .filter($"n" * 10 > $"_total") // exact heavy hitters: freq > 0.1
@@ -380,8 +381,8 @@ object Aggregates extends QueryPack {
     // counts subtree per consumer — the committed after-plan showed the
     // events scan duplicated (scan 1 + scan 5), so the claimed 3→2 pass
     // reduction wasn't real until the counts frame materialized once.
-    val counts = graft.state.Materialize.pinIfLarge(
-      ev.groupBy($"user_id").agg(count(lit(1)).as("n_exact")))
+    val counts = graft.state.Materialize.pin(
+      ev.groupBy($"user_id").agg(count(lit(1)).as("n_exact")), Policy.IfLarge)
     val scalars = counts
       .agg(sum($"n_exact").as("_total"), count(lit(1)).as("_nu"))
     counts

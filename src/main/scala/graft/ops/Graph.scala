@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.state.Materialize.Policy
 
 /** Graph analytics over a co-occurrence projection of the fact table —
   * the relational form of the graph workloads a training-data pipeline
@@ -142,21 +143,14 @@ object Graph extends QueryPack {
     * (like [[pagerankDirectedFrom]]) so the weak-scaling probe can
     * drive it with replicated disjoint graphs (VERDICT r13 #6).
     */
-  private[ops] def pagerankFrom(e: DataFrame): DataFrame = {
+  private[ops] def pagerankFrom(e: DataFrame, cadence: Int = 5): DataFrame = {
     import e.sparkSession.implicits._
     val u = e.select($"a".as("w1"), $"b".as("w2"))
       .union(e.select($"b".as("w1"), $"a".as("w2")))
-      .transform(graft.state.Materialize.pin)
-    // pin-mode autopilot (VERDICT r15 #3): the loop-resident pins below
-    // (weighted edges, node domain, rank ring) upgrade to reliable
-    // checkpoint FILES when the just-materialized edge pin's measured
-    // block bytes put the loop past the single-JVM GC cliff — r15
-    // measured reliable pins collapsing the 64-replica stall 153–680s
-    // → 95–97s. An explicitly configured session mode always wins.
-    val pinLoop: DataFrame => DataFrame = {
-      val mode = graft.state.Materialize.loopMode(u)
-      df => graft.state.Materialize.pinWith(df, mode)
-    }
+      .transform(graft.state.Materialize.pin(_, Policy.Always))
+    // the loop-resident pins below (degree and rank frames) take the
+    // residency the edge pin's measured bytes choose (VERDICT r15 #3)
+    val loop = Policy.loop(u)
     // r18 (VERDICT r17 #2): the degree now lives on the RANK frame, not
     // the edges — r0 IS the degree aggregate of the pinned edges (the
     // symmetrized union gives every vertex out_w ≥ 1, so the groupBy is
@@ -167,7 +161,7 @@ object Graph extends QueryPack {
     val r0 = u.groupBy($"w1")
       .agg(count(lit(1)).as("out_w"))
       .select($"w1".as("node"), $"out_w", lit(1000000L).as("r"))
-      .transform(pinLoop)
+      .transform(graft.state.Materialize.pin(_, loop))
     // the static zero-contribution stream (see prStep): a projection of
     // the r0 PIN, so r0 stays resident for the loop's lifetime (like u)
     val zeros = r0.select($"node", lit(0L).as("c"), $"out_w".as("ow"))
@@ -180,22 +174,10 @@ object Graph extends QueryPack {
     // size. The DIRECTED form cannot do this (see pagerankDirectedFrom:
     // its per-iteration dangling-mass broadcast evaluates eagerly, so an
     // unpinned prev-chain re-executes once per remaining iteration —
-    // measured 3.7s -> 6.4s at cadence 5).
-    //
-    // Conf-escapable cadence (r14): a deeper chain is one job whose
-    // in-flight shuffle working set spans that many iterations of edge
-    // contributions. The r14 weak-scaling probe measured the undirected
-    // row's per-edge cpu growing ~2.5x from 4 to 64 disjoint replicas
-    // and RULED OUT this knob as the cause (cadence 2 re-probe grew the
-    // same) along with partition count (64 replicas at 16 vs 64 parts
-    // within 15%) — residual unattributed, recorded in COVERAGE. The
-    // knob stays because the trade is real and host-dependent: pick the
-    // cadence on measurement; results are bit-identical at any value
-    // (law-tested in GraphSpec).
-    val cadence = e.sparkSession.conf
-      .get("spark.graft.pagerank.pinCadence", "5").toInt
+    // measured 3.7s -> 6.4s at cadence 5). Results are bit-identical at
+    // any cadence (law-tested in GraphSpec).
     require(cadence >= 1 && cadence <= PrIters,
-      s"spark.graft.pagerank.pinCadence must be in [1, $PrIters], got $cadence")
+      s"pagerankFrom: pin cadence must be in [1, $PrIters], got $cadence")
     // superseded rank pins are DEAD the moment the next pin lands (the
     // output consumes only the newest pinned frame; iterations between
     // pins are lazy and execute during the new pin's materialization) —
@@ -209,7 +191,7 @@ object Graph extends QueryPack {
     for (i <- 1 to PrIters) {
       r = step(r)
       if (i % cadence == 0) {
-        r = r.transform(pinLoop)
+        r = r.transform(graft.state.Materialize.pin(_, loop))
         prevPin.foreach(graft.state.Materialize.releasePinned)
         prevPin = Some(r)
       }
@@ -315,17 +297,13 @@ object Graph extends QueryPack {
   private[ops] def pagerankDirectedFrom(e: DataFrame): DataFrame = {
     import e.sparkSession.implicits._
     val ed = e.select($"a".as("w1"), $"b".as("w2"))
-      .transform(graft.state.Materialize.pin)
-    // pin-mode autopilot from the measured edge-pin bytes (VERDICT r15
-    // #3) — see pagerankFrom; an explicit session mode always wins
-    val pinLoop: DataFrame => DataFrame = {
-      val mode = graft.state.Materialize.loopMode(ed)
-      df => graft.state.Materialize.pinWith(df, mode)
-    }
+      .transform(graft.state.Materialize.pin(_, Policy.Always))
+    // loop residency from the edge pin's measured bytes (VERDICT r15 #3)
+    val loop = Policy.loop(ed)
     val outw = ed.groupBy($"w1").agg(count(lit(1)).as("out_w"))
     val nodes = ed.select($"w1".as("node"))
       .union(ed.select($"w2".as("node"))).distinct()
-      .transform(pinLoop)
+      .transform(graft.state.Materialize.pin(_, loop))
     val n = nodes.count()
     // ANSI mode (Spark 4 default) makes the dangling share's `dm div n`
     // a runtime DivideByZero on an empty graph — fail at the API edge
@@ -347,7 +325,7 @@ object Graph extends QueryPack {
     // ed stays resident instead (2 columns). nodes is dead once nodesF
     // materializes (outw is consumed inside that one pin).
     val nodesF = prDirNodesFlagged(nodes, outw)
-      .transform(pinLoop)
+      .transform(graft.state.Materialize.pin(_, loop))
     graft.state.Materialize.releasePinned(nodes)
     def step(prev: DataFrame): DataFrame = prDirStep(ed, n, prev)
     var r = nodesF.withColumn("r", lit(1000000L))
@@ -366,7 +344,7 @@ object Graph extends QueryPack {
     for (i <- 1 to PrIters) {
       r = step(r)
       if (i % 2 == 0) {
-        r = r.transform(pinLoop)
+        r = r.transform(graft.state.Materialize.pin(_, loop))
         prevPin.foreach(graft.state.Materialize.releasePinned)
         prevPin = Some(r)
         if (i == 2) graft.state.Materialize.releasePinned(nodesF)
@@ -385,7 +363,7 @@ object Graph extends QueryPack {
   private[graft] val iterationPlans: Map[String, (SparkSession, String) => DataFrame] = Map(
     "graph_pagerank_iter" -> { (spark, dir) =>
       import spark.implicits._
-      val pin = graft.state.Materialize.pin _
+      val pin = graft.state.Materialize.pin(_: DataFrame, Policy.Always)
       val e = edgesAt(spark, dir, 45)
       val u = e.select($"a".as("w1"), $"b".as("w2"))
         .union(e.select($"b".as("w1"), $"a".as("w2"))).transform(pin)
@@ -397,7 +375,7 @@ object Graph extends QueryPack {
     },
     "graph_pagerank_directed_iter" -> { (spark, dir) =>
       import spark.implicits._
-      val pin = graft.state.Materialize.pin _
+      val pin = graft.state.Materialize.pin(_: DataFrame, Policy.Always)
       val ed = edgesAt(spark, dir, 45).select($"a".as("w1"), $"b".as("w2"))
         .transform(pin)
       val outw = ed.groupBy($"w1").agg(count(lit(1)).as("out_w"))
@@ -429,21 +407,17 @@ object Graph extends QueryPack {
     val e = edgesAt(spark, dir, 45)
     val u = e.select($"a".as("v"), $"b".as("w"))
       .union(e.select($"b".as("v"), $"a".as("w")))
-      .transform(graft.state.Materialize.pin)
-    // pin-mode autopilot from the adjacency pin's measured bytes
-    // (VERDICT r15 #3, see pagerankFrom): the K level pins accumulate
-    // for the walk's lifetime (the visited union reads all of them)
-    val pinLoop: DataFrame => DataFrame = {
-      val mode = graft.state.Materialize.loopMode(u)
-      df => graft.state.Materialize.pinWith(df, mode)
-    }
+      .transform(graft.state.Materialize.pin(_, Policy.Always))
+    // loop residency from the adjacency pin's bytes: the K level pins
+    // accumulate for the walk's lifetime (the visited union reads all)
+    val loop = Policy.loop(u)
     val src = e.agg(min($"a")).head().getLong(0) // one-row bounded probe
     var visited = Seq((src, 0L)).toDF("v", "lvl")
-      .transform(pinLoop)
+      .transform(graft.state.Materialize.pin(_, loop))
     var frontier = visited
     for (lvl <- 1 to K) {
       val nxt = khopExpand(u, visited, frontier, lvl)
-        .transform(pinLoop)
+        .transform(graft.state.Materialize.pin(_, loop))
       // visited is a union of ALREADY-pinned level frames — re-pinning
       // it each round re-materialized the cumulative set K times (~2×K
       // eager jobs for a K-hop walk); the lazy union over the level pins
@@ -541,13 +515,13 @@ object Graph extends QueryPack {
   private def degreeOriented(spark: SparkSession, eRaw: DataFrame)
       : (DataFrame, DataFrame, DataFrame) = {
     import spark.implicits._
-    val e = eRaw.transform(graft.state.Materialize.pin)
+    val e = eRaw.transform(graft.state.Materialize.pin(_, Policy.Always))
     val deg = e.select($"a".as("v")).union(e.select($"b".as("v")))
       .groupBy($"v").agg(count(lit(1)).as("deg"))
-    // pin-mode autopilot (VERDICT r15 #3, see pagerankFrom): the
-    // oriented list is edge-sized and feeds all three wedge-join sides
-    val oriented = orientByDegree(e, deg).transform(df =>
-      graft.state.Materialize.pinWith(df, graft.state.Materialize.loopMode(e)))
+    // loop residency (VERDICT r15 #3): the oriented list is edge-sized
+    // and feeds all three wedge-join sides
+    val oriented =
+      graft.state.Materialize.pin(orientByDegree(e, deg), Policy.loop(e))
     (e, deg, oriented)
   }
 

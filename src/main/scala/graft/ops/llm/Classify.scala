@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.ops.QueryPack
+import graft.state.Materialize.Policy
 
 /** Trained document classification for LLM data curation (round-2
   * mandate: text analysis / quality scoring as first-class pipeline
@@ -89,8 +90,8 @@ object Classify extends QueryPack {
     // the train-split tokenize + vocabulary aggregate tower runs once
     // per consumer, which below the threshold is cheaper than the pin
     // barrier and above it is a duplicated corpus pass.
-    val prof = graft.state.Materialize.pinIfLarge(
-      trainCounts(docs).select($"lang".as("plang"), $"w", $"cnt"))
+    val prof = graft.state.Materialize.pin(
+      trainCounts(docs).select($"lang".as("plang"), $"w", $"cnt"), Policy.IfLarge)
     val tot  = prof.groupBy($"plang").agg(sum($"cnt").as("tot"))
     val test = docs.filter($"doc_id" % HoldoutMod === HoldoutRem)
     val ev = test
@@ -138,19 +139,19 @@ object Classify extends QueryPack {
     // the train-split tokenize + vocabulary aggregate tower runs once
     // per consumer, which below the threshold is cheaper than the pin
     // barrier and above it is a duplicated corpus pass.
-    val prof = graft.state.Materialize.pinIfLarge(
-      trainCounts(docs).select($"lang".as("plang"), $"w", $"cnt"))
+    val prof = graft.state.Materialize.pin(
+      trainCounts(docs).select($"lang".as("plang"), $"w", $"cnt"), Policy.IfLarge)
     val tot  = prof.groupBy($"plang").agg(sum($"cnt").as("tot"))
     val test = docs.filter($"doc_id" % HoldoutMod === HoldoutRem)
     // Pinned above the adaptive threshold (r17 pin, r18 conditional):
     // sc feeds BOTH the winner window and the class-sum fold —
     // unpinned, the holdout tokenize + score tower runs twice.
-    val sc = graft.state.Materialize.pinIfLarge(test
+    val sc = graft.state.Materialize.pin(test
       .select($"doc_id", explode(split($"text", " ")).as("w"))
       .join(broadcast(prof), Seq("w"))
       .groupBy($"doc_id", $"plang").agg(sum($"cnt").as("evidence"))
       .join(broadcast(tot), Seq("plang"))
-      .withColumn("s", $"evidence".cast("double") / $"tot"))
+      .withColumn("s", $"evidence".cast("double") / $"tot"), Policy.IfLarge)
     val win = sc.withColumn("rn", row_number().over(
         Window.partitionBy($"doc_id").orderBy($"s".desc, $"plang")))
       .filter($"rn" === 1)
@@ -197,8 +198,8 @@ object Classify extends QueryPack {
     // the train-split tokenize + vocabulary aggregate tower runs once
     // per consumer, which below the threshold is cheaper than the pin
     // barrier and above it is a duplicated corpus pass.
-    val prof = graft.state.Materialize.pinIfLarge(
-      trainCounts(docs).select($"lang".as("plang"), $"w", $"cnt"))
+    val prof = graft.state.Materialize.pin(
+      trainCounts(docs).select($"lang".as("plang"), $"w", $"cnt"), Policy.IfLarge)
     val tot  = prof.groupBy($"plang").agg(sum($"cnt").as("tot"))
     val test = docs.filter($"doc_id" % HoldoutMod === HoldoutRem)
     val sc = test

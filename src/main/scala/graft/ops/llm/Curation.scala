@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.ops.QueryPack
+import graft.state.Materialize.Policy
 
 /** Corpus-curation operators that sit between cleaning and tokenization
   * in a training-data pipeline: context-window chunking (split long
@@ -146,7 +147,7 @@ object Curation extends QueryPack {
       .select($"doc_id", posexplode(split($"text", " ")).as(Seq("pos", "w1")))
       .withColumn("w2", lead($"w1", 1).over(wDoc))
       .where($"w2".isNotNull)
-      .select($"doc_id", $"w1", $"w2"))
+      .select($"doc_id", $"w1", $"w2"), Policy.Always)
     val c1 = pairs.groupBy($"w1").agg(count(lit(1)).as("c1"))
     val c2 = pairs.groupBy($"w1", $"w2").agg(count(lit(1)).as("c2"))
     pairs
@@ -299,7 +300,7 @@ object Curation extends QueryPack {
       .withColumn("w2", lead($"w1", 1).over(wDoc))
       .withColumn("w3", lead($"w1", 2).over(wDoc))
       .where($"w3".isNotNull)
-      .select($"doc_id", $"part", $"w1", $"w2", $"w3"))
+      .select($"doc_id", $"part", $"w1", $"w2", $"w3"), Policy.Always)
     val train = tri.where($"part" === "train")
     val c3  = train.groupBy($"w1", $"w2", $"w3").agg(count(lit(1)).as("c3"))
     val c2  = train.groupBy($"w1", $"w2").agg(count(lit(1)).as("c2"))
@@ -374,7 +375,8 @@ object Curation extends QueryPack {
         concat(lit(" "),
                trim(regexp_replace($"word", "(.)", "$1  ")),
                lit(" ")).as("state"))
-      .transform(graft.state.Materialize.pin) // vocab-sized; pins the aggregate result
+      // vocab-sized; pins the aggregate result
+      .transform(graft.state.Materialize.pin(_, Policy.Always))
     val merges = Seq.newBuilder[(Long, String, String, Long)]
     var k = 1
     var exhausted = false
@@ -395,7 +397,8 @@ object Curation extends QueryPack {
           merges += ((k.toLong, a, b, cnt))
           states = states.select($"word", $"f",
             replace($"state", lit(s" $a  $b "), lit(s" $a$b ")).as("state"))
-            .transform(graft.state.Materialize.pin) // truncate the per-round projection lineage
+            // truncate the per-round projection lineage
+            .transform(graft.state.Materialize.pin(_, Policy.Always))
           k += 1
         case _ =>
           // no pairs left (every word fully merged) — the oracle's empty
@@ -642,17 +645,17 @@ object Curation extends QueryPack {
     // materialized bytes are (id, lang, text, qual), not the token arrays.
     val scored = scoreDocs(docs)
       .select($"doc_id", $"lang", $"text", $"qual")
-      .transform(graft.state.Materialize.pin)
+      .transform(graft.state.Materialize.pin(_, Policy.Always))
     val wDup = Window.partitionBy(md5($"text")).orderBy($"qual".desc, $"doc_id")
     val canon = scored.withColumn("rn", row_number().over(wDup))
       .where($"qual" && $"rn" === 1)
       .select($"doc_id", $"lang", $"text")
-      .transform(graft.state.Materialize.pin)
+      .transform(graft.state.Materialize.pin(_, Policy.Always))
     // Third stage pin (r17): chunks feeds the dup census AND the
     // join-back — unpinned, the CDC per-byte md5 tower ran twice over
     // the canon pin.
     val chunks = Dedup.cdcChunkRowsBatch(canon.select($"doc_id", $"text"))
-      .transform(graft.state.Materialize.pin)
+      .transform(graft.state.Materialize.pin(_, Policy.Always))
     val dup = chunks.groupBy($"h").agg(countDistinct($"doc_id").as("nd"))
     val chunkCensus = chunks.join(dup, Seq("h"))
       .join(canon.select($"doc_id", $"lang"), Seq("doc_id"))

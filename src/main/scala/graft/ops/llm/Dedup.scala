@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.ops.QueryPack
+import graft.state.Materialize.Policy
 
 /** Deduplication operators for LLM training-data pipelines (SURVEY.md §2
   * C36/C37 + the round-2 mandate): exact content-hash dedup, MinHash+LSH
@@ -43,6 +44,8 @@ import graft.ops.QueryPack
   * engines (see [[Similarity]]).
   */
 object Dedup extends QueryPack {
+
+  private val logger = graft.util.Log.logger("ops.llm.Dedup")
 
   /** The word n-gram shingle expression over a token array `ws` — ONE
     * definition shared by every shingle consumer (MinHash, SimHash,
@@ -300,14 +303,8 @@ object Dedup extends QueryPack {
         lit(0L).as("n_occ"), lit(0L).as("n_docs"))
       .where(lit(false))
 
-    // stage telemetry for tuning runs (same contract as SuffixIndex)
-    val dbg = java.lang.Boolean.getBoolean("graft.suffix.debug") ||
-      sys.env.get("SPARK_GRAFT_SUFFIX_DEBUG").contains("1")
-    var tDbg = System.nanoTime()
-    def lap(tag: String): Unit = if (dbg) {
-      println(f"[longest-dup] $tag: ${(System.nanoTime() - tDbg) / 1e9}%.1fs")
-      tDbg = System.nanoTime()
-    }
+    // stage telemetry for tuning runs: DEBUG on graft.ops.llm.Dedup
+    val lap = new graft.util.Log.Laps(logger, "longest-dup")
 
     // ---- bracket: finest round with a FULL tie (both positions have
     // ≥ compareLen remaining chars ⇒ true LCP ≥ compareLen; padded
@@ -334,7 +331,7 @@ object Dedup extends QueryPack {
           .where($"len" - $"i" >= rd.compareLen)
           .withColumn("n", count(lit(1)).over(Window.partitionBy($"r")))
           .where($"n" >= 2).select($"doc_id").distinct()
-          .transform(graft.state.Materialize.pin)
+          .transform(graft.state.Materialize.pin(_, Policy.Always))
         val anyTie = !td.isEmpty
         if (anyTie) { loRound = rd; lo = rd.compareLen; tiedDocs = td }
         else hiBound = rd.compareLen - 1
@@ -379,7 +376,7 @@ object Dedup extends QueryPack {
       // precompute the offset ranks at fixed multiples of c once; the
       // probes' only per-L window is the single L−c offset
       val kPre = math.max(ceilDiv(hi, c) - 1, 0)
-      if (dbg) { val n = tiedDocs.count(); lap(s"tiedDocs n=$n (dbg-only job)") }
+      if (lap.enabled) { val n = tiedDocs.count(); lap(s"tiedDocs n=$n (dbg-only job)") }
       // broadcast the id set: without the hint the semi-join plans as a
       // sort-merge and shuffles the corpus-sized rank frame (measured
       // ~1.5s of the pf pin at sf0.1 for a 303-doc id set). The frame is
@@ -427,7 +424,7 @@ object Dedup extends QueryPack {
       val pf = (1 to kPre).foldLeft(
           pf0.repartition(parts, $"doc_id")) { (df, k) =>
         df.withColumn(s"rk$k", lead($"r", k * c).over(byPos))
-      }.transform(graft.state.Materialize.pin)
+      }.transform(graft.state.Materialize.pin(_, Policy.Always))
       lap(s"pf build (c=$c, kPre=$kPre, rows=$pfRows, parts=$parts)")
 
       // ranks at offsets {0, c, …, (m−2)c, L−c}: consecutive gaps ≤ c,
@@ -707,7 +704,7 @@ object Dedup extends QueryPack {
     * each previously re-ran the shingle/banding/verify chain from the
     * scan. The verified pair frame is tiny (LSH-bounded), so the cache
     * pins a few hundred rows while the build is paid once — same
-    * contract and same Bench-sweep-survival (`pinRetained`) as
+    * contract and same Bench-sweep-survival (`Policy.Retained`) as
     * [[SuffixIndex]]; see COVERAGE.md's bench-attribution note.
     */
   private val pairsCache =
@@ -718,7 +715,7 @@ object Dedup extends QueryPack {
     graft.state.Materialize.purgeStopped(pairsCache)(_._1)
     pairsCache.computeIfAbsent((spark, dir), _ =>
       nearDupPairsUncached(spark, dir)
-        .transform(graft.state.Materialize.pinRetained))
+        .transform(graft.state.Materialize.pin(_, Policy.Retained)))
   }
 
   private def nearDupPairsUncached(spark: SparkSession, dir: String): DataFrame =
@@ -879,7 +876,7 @@ object Dedup extends QueryPack {
     // aggregation buffer.
     val kept = graft.state.Materialize.pin(sh.withColumn("df",
         count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy(col("s"))))
-      .filter(col("df") <= cap).drop("df"))
+      .filter(col("df") <= cap).drop("df"), Policy.Always)
     val sizes = kept.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val pairs = kept.select(col("doc_id").as("d1"), col("s"))
       .join(kept.select(col("doc_id").as("d2"), col("s")), Seq("s"))
@@ -940,7 +937,7 @@ object Dedup extends QueryPack {
              sum(when(expr(s"shiftright(hv, $i) & 1") === 1, 1).otherwise(-1)).as(s"b$i")): _*)
       .select($"doc_id",
         (0 until 32).map(i => when(col(s"b$i") >= 0, lit(1L << i)).otherwise(0L))
-          .reduce(_ + _).as("sh32")))
+          .reduce(_ + _).as("sh32")), Policy.Always)
   }
 
   def dedupSimhash(spark: SparkSession, dir: String): DataFrame = {
@@ -1078,7 +1075,7 @@ object Dedup extends QueryPack {
     val spark = pairs.sparkSession
     var e = pairs.select($"d1".as("u"), $"d2".as("v"))
       .where($"u" =!= $"v").distinct()
-      .transform(graft.state.Materialize.pin)
+      .transform(graft.state.Materialize.pin(_, Policy.Always))
     val nEdges = e.count()
     val localMax = spark.conf.get(CcLocalEdgeMaxKey, "200000").toLong
     if (nEdges <= localMax) {
@@ -1090,14 +1087,9 @@ object Dedup extends QueryPack {
       graft.state.Materialize.releasePinned(e)
       return starComponentsLocal(collected, spark)
     }
-    // pin-mode autopilot from the measured edge-pin bytes (VERDICT r15
-    // #3, see Graph.pagerankFrom): the contraction's round pins upgrade
-    // to reliable checkpoint files past the single-JVM GC cliff; an
-    // explicit session mode always wins
-    val pinLoop: DataFrame => DataFrame = {
-      val mode = graft.state.Materialize.loopMode(e)
-      df => graft.state.Materialize.pinWith(df, mode)
-    }
+    // the contraction's round pins take the residency the edge pin's
+    // measured bytes choose (VERDICT r15 #3)
+    val loop = Policy.loop(e)
     // vertex domain = vertices incident to ≥1 NON-self edge (derived from
     // the filtered frame `e`, not the raw pairs): a vertex appearing only
     // in self-pairs is not part of the pair graph, on BOTH paths — the
@@ -1105,7 +1097,7 @@ object Dedup extends QueryPack {
     // and deriving the coverage denominator from raw pairs made the
     // distributed require() disagree with it (ADVICE r9)
     val verts = e.select($"u").union(e.select($"v".as("u")))
-      .distinct().transform(graft.state.Materialize.pin)
+      .distinct().transform(graft.state.Materialize.pin(_, Policy.Always))
     val nVerts = verts.count()
     // only the COUNT is consumed downstream — the vertex pin is dead now
     graft.state.Materialize.releasePinned(verts)
@@ -1118,7 +1110,6 @@ object Dedup extends QueryPack {
     }
     def largeStar(df: DataFrame): DataFrame = largeStarStep(df)
     def smallStar(df: DataFrame): DataFrame = smallStarStep(df)
-    val dbg = java.lang.Boolean.getBoolean("graft.graph.debug")
     var prev = fp(e)
     var converged = false
     var round = 0
@@ -1126,7 +1117,7 @@ object Dedup extends QueryPack {
       // one pin + one fingerprint per (large ∘ small) round; stability
       // of the COMPOSITION triggers the (rare) per-op confirmation
       // below instead of paying a mid-round materialization every round
-      val next = smallStar(largeStar(e)).transform(pinLoop)
+      val next = graft.state.Materialize.pin(smallStar(largeStar(e)), loop)
       val fpS = fp(next)
       if (fpS == prev) {
         // composition-stable: confirm large-star alone is also stable
@@ -1141,14 +1132,14 @@ object Dedup extends QueryPack {
       graft.state.Materialize.releasePinned(e)
       e = next
       round += 1
-      if (dbg) println(s"[star-components] round $round fp=$fpS")
+      logger.debug(s"[star-components] round $round fp=$fpS")
     }
     require(converged, s"star contraction did not converge in $round rounds")
     // star forest: every non-minimum vertex carries exactly one edge to
     // its component minimum; the minima label themselves
     val labels = e.select($"u".as("doc"), $"v".as("lab"))
       .union(e.select($"v").distinct().select($"v".as("doc"), $"v".as("lab")))
-    val out = labels.transform(pinLoop)
+    val out = graft.state.Materialize.pin(labels, loop)
     val covered = out.count()
     require(covered == nVerts,
       s"star contraction lost vertices: $covered labels for $nVerts vertices")
@@ -1350,7 +1341,7 @@ object Dedup extends QueryPack {
     val k = ivfCellsFor(corpus)
     embPairsCache.computeIfAbsent((spark, dir, thr, sameCellOnly, k), _ =>
       embeddingPairs(corpus, thr, sameCellOnly)
-        .transform(graft.state.Materialize.pinRetained))
+        .transform(graft.state.Materialize.pin(_, Policy.Retained)))
   }
 
   /** The production APPROXIMATE mode of [[dedupEmbedding]]: candidates
@@ -1975,8 +1966,9 @@ object Dedup extends QueryPack {
     graft.state.Materialize.purgeStopped(spanCache)(_._1)
     spanCache.computeIfAbsent((spark, dir), _ => {
       val t0 = System.nanoTime()
-      val sp = graft.state.Materialize.pinRetained(dupSpans(
-        Tables.documents(spark, dir).select(col("doc_id"), col("text"))))
+      val sp = graft.state.Materialize.pin(dupSpans(
+        Tables.documents(spark, dir).select(col("doc_id"), col("text"))),
+        Policy.Retained)
       spanFrameColdGauge.sample((System.nanoTime() - t0) / 1e9)
       sp
     })
@@ -2071,8 +2063,8 @@ object Dedup extends QueryPack {
     // (the winnowPairs lesson, measured 4.1s → ~3s at sf0.1) — the
     // frame is tiny (span rows only), so the checkpoint is cheap. The
     // dir-keyed gates share the memoized frame instead (dupSpansForDir).
-    exciseFromSpans(dupSpans(docs).transform(graft.state.Materialize.pin),
-      docs)
+    exciseFromSpans(
+      graft.state.Materialize.pin(dupSpans(docs), Policy.Always), docs)
 
   // callers decide how `sp` is materialized (memoized retained pin for
   // the dir-keyed gates, plain pin for the from-frame twin)
@@ -2259,7 +2251,7 @@ object Dedup extends QueryPack {
     // inside cdcChunkRowsBatch: single-consumer callers (ScaleProbe,
     // the streaming twin's tests) would pay the barrier for nothing.
     val chunks = graft.state.Materialize.pin(cdcChunkRowsBatch(
-      Tables.documents(spark, dir).select($"doc_id", $"text")))
+      Tables.documents(spark, dir).select($"doc_id", $"text")), Policy.Always)
     val dup = chunks.groupBy($"h").agg(countDistinct($"doc_id").as("nd"))
     chunks.join(dup, Seq("h"))
       .groupBy($"doc_id")

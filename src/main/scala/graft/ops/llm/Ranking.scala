@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.ops.QueryPack
+import graft.state.Materialize.Policy
 
 /** Relevance ranking and language-model statistics over the `documents`
   * corpus — the retrieval/statistics half of a training-data pipeline
@@ -50,8 +51,8 @@ object Ranking extends QueryPack {
     // and df itself no longer re-tokenizes the corpus: countDistinct(doc)
     // per term over the token stream IS the per-term row count of the
     // (doc, term) frame, so one tokenize pass serves both statistics.
-    val tf = graft.state.Materialize.pinIfLarge(
-      t.groupBy($"doc_id", $"w").agg(count(lit(1)).as("tf")))
+    val tf = graft.state.Materialize.pin(
+      t.groupBy($"doc_id", $"w").agg(count(lit(1)).as("tf")), Policy.IfLarge)
     val df = tf.groupBy($"w").agg(count(lit(1)).as("df"))
     val n  = docs.agg(count(lit(1)).as("n_docs"))
     val rn = Window.partitionBy($"doc_id").orderBy($"score".desc, $"w")
@@ -99,8 +100,8 @@ object Ranking extends QueryPack {
     // Pinned (r17, the tfidf device): df = per-term row count of the
     // (doc, term) frame — one tokenize pass instead of two; the pinned
     // frame is query-term-bounded (tiny).
-    val tf = graft.state.Materialize.pinIfLarge(
-      t.groupBy($"doc_id", $"w").agg(count(lit(1)).as("tf")))
+    val tf = graft.state.Materialize.pin(
+      t.groupBy($"doc_id", $"w").agg(count(lit(1)).as("tf")), Policy.IfLarge)
     val df = tf.groupBy($"w").agg(count(lit(1)).as("df"))
     val n  = Tables.documents(spark, dir)
       .agg(count(lit(1)).as("n_docs"), sum(size(split($"text", " ")).cast("long")).as("sum_dl"))
@@ -185,8 +186,8 @@ object Ranking extends QueryPack {
     // has two consumers (the c1 roll-up and the score join) →
     // conditional pin; the frame is bigram-type-bounded, far below the
     // token stream it summarizes.
-    val c2 = graft.state.Materialize.pinIfLarge(
-      big.groupBy($"w1", $"w2").agg(count(lit(1)).as("c2")))
+    val c2 = graft.state.Materialize.pin(
+      big.groupBy($"w1", $"w2").agg(count(lit(1)).as("c2")), Policy.IfLarge)
     val c1 = c2.groupBy($"w1").agg(sum($"c2").as("c1"))
     val rn = Window.partitionBy($"w1").orderBy($"c2".desc, $"w2")
     c2.join(broadcast(c1), "w1")
@@ -289,7 +290,7 @@ object Ranking extends QueryPack {
       r = nodes.join(contrib, Seq("node"), "left")
         .select($"node",
           (lit(150000L) + expr("(850 * coalesce(incoming, 0L)) div 1000")).as("r"))
-        .transform(graft.state.Materialize.pin)
+        .transform(graft.state.Materialize.pin(_, Policy.Always))
     }
     r.orderBy($"r".desc, $"node")
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.ops.QueryPack
+import graft.state.Materialize.Policy
 
 /** Similarity search over the `embeddings` fixture (SURVEY.md §2 C38):
   * brute-force cosine top-k as the exact baseline, and a random-hyperplane
@@ -208,12 +209,12 @@ object Similarity extends QueryPack {
     // Pinned (r17): buckets feeds BOTH the query and candidate sides of
     // the banding join — unpinned, the sign-bit tower (Tables·Bits = 16
     // 64-dim dots per corpus vector) ran twice per query.
-    val buckets = graft.state.Materialize.pinIfLarge(n.crossJoin(broadcast(planes))
+    val buckets = graft.state.Materialize.pin(n.crossJoin(broadcast(planes))
       .withColumn("bitval", when(
         expr(dotFold("v", "w")) >= 0,
         expr("shiftleft(1L, b)")).otherwise(0L))
       .groupBy($"vec_id", $"t")
-      .agg(sum($"bitval").as("bucket")))
+      .agg(sum($"bitval").as("bucket")), Policy.IfLarge)
     val qb = buckets.filter($"vec_id" < 10).select($"vec_id".as("q_id"), $"t", $"bucket")
     val cand = qb
       .join(buckets.select($"vec_id".as("c_id"), $"t", $"bucket"), Seq("t", "bucket"))
@@ -334,7 +335,7 @@ object Similarity extends QueryPack {
     // makes T composed iterations cost T× one step (the Graph loop-pin
     // pattern); the materialization is distributed (localCheckpoint) —
     // the loop still never returns data to the driver.
-    val cells = graft.state.Materialize.pinIfLarge(cells0)
+    val cells = graft.state.Materialize.pin(cells0, Policy.IfLarge)
     val cent = cells
       .select(col(prevCol).as("cell"), posexplode($"v").as(Seq("d", "x")))
       .groupBy($"cell", $"d")
@@ -483,7 +484,7 @@ object Similarity extends QueryPack {
     val assign0 = pqD2(parts.join(broadcast(pqSeeds(spark)), Seq("sub")), "sv", "w", "d2")
       .withColumn("rn", row_number().over(byPos)).where($"rn" === 1)
       .select($"vec_id" +: kept :+ $"sub" :+ $"sv" :+ $"code".as("c0"): _*)
-      .transform(graft.state.Materialize.pin)
+      .transform(graft.state.Materialize.pin(_, Policy.Always))
     // book is EXACTLY M·Ks = 32 rows by operator definition (the
     // codebook's size is a constant of the quantizer, independent of
     // corpus scale) but has TWO consumers (the re-encode here and the
@@ -823,7 +824,7 @@ object Similarity extends QueryPack {
     // the query and corpus sides, and the projection (16 dots/vector) is
     // a full corpus pass per consumer above the threshold — the ann_lsh
     // r17 treatment, with the r18 size gate
-    val proj = graft.state.Materialize.pinIfLarge(rpProject(spark, dir))
+    val proj = graft.state.Materialize.pin(rpProject(spark, dir), Policy.IfLarge)
     val q = proj.filter($"vec_id" < 10)
       .select($"vec_id".as("q_id"), $"p".as("pq"))
     val w = Window.partitionBy($"q_id").orderBy($"d2p".asc, $"n_id")
@@ -1059,7 +1060,8 @@ object Similarity extends QueryPack {
         .withColumn("sim", expr(dotExpr) / ($"nq" * $"nc"))
         .withColumn("base_rk", row_number().over(wBase))
         .filter($"base_rk" <= 20)
-        .select($"q_id", $"n_id", $"vc", $"nc", $"sim", $"base_rk"))
+        .select($"q_id", $"n_id", $"vc", $"nc", $"sim", $"base_rk"),
+      Policy.Always)
     // pairwise over the bounded candidate frame: penalty(j) =
     // max sim(i, j) over candidates i ranked above j
     val hi = cand.select($"q_id", $"n_id".as("h_id"), $"vc".as("vh"),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.state.Materialize.Policy
 
 /** The corpus-global suffix index SHARED by `llm_suffix_array_global`
   * (which dumps the final ranks) and `llm_longest_dup_substring` (which
@@ -199,18 +200,11 @@ object SuffixIndex {
     // retained pins survive Bench's between-queries debris sweep —
     // required exactly when the index outlives the building query
     // (the forDir cache); from-frame builds stay sweepable
-    val pin: DataFrame => DataFrame =
-      if (retain) graft.state.Materialize.pinRetained
-      else graft.state.Materialize.pin
-    // stage telemetry for tuning runs (-Dgraft.suffix.debug=true or
-    // SPARK_GRAFT_SUFFIX_DEBUG=1 — the env form survives sbt's fork)
-    val dbg = java.lang.Boolean.getBoolean("graft.suffix.debug") ||
-      sys.env.get("SPARK_GRAFT_SUFFIX_DEBUG").contains("1")
-    var tDbg = System.nanoTime()
-    def lap(tag: String): Unit = if (dbg) {
-      println(f"[suffix-index] $tag: ${(System.nanoTime() - tDbg) / 1e9}%.1fs")
-      tDbg = System.nanoTime()
-    }
+    val policy = if (retain) Policy.Retained else Policy.Always
+    val pin = graft.state.Materialize.pin(_: DataFrame, policy)
+    // stage telemetry for tuning runs: DEBUG on graft.ops.llm.SuffixIndex
+    val lap = new graft.util.Log.Laps(
+      graft.util.Log.logger("ops.llm.SuffixIndex"), "suffix-index")
     // BYTE-level (UTF-8) semantics, declared round 10: positions are
     // byte offsets, lengths are byte counts, and the suffix order is
     // byte-lexicographic — which for UTF-8 IS code-point order, so the

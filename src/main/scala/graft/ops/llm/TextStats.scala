@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.ops.QueryPack
+import graft.state.Materialize.Policy
 
 /** Text-analysis operators for LLM data curation (SURVEY.md §2 C39 + the
   * round-2 mandate): corpus statistics, language identification, quality
@@ -246,8 +247,8 @@ object TextStats extends QueryPack {
     // its w-rollup (Σ over sources ≡ counting the raw stream) and the
     // per-source token/OOV totals are n-weighted sums over it. Two
     // consumers → conditional pin (per-source-vocabulary-bounded frame).
-    val counts = graft.state.Materialize.pinIfLarge(
-      toks.groupBy($"source", $"w").agg(count(lit(1)).as("n")))
+    val counts = graft.state.Materialize.pin(
+      toks.groupBy($"source", $"w").agg(count(lit(1)).as("n")), Policy.IfLarge)
     val vocab = counts.groupBy($"w").agg(sum($"n").as("nw"))
       .orderBy($"nw".desc, $"w").limit(20)
     counts.join(broadcast(vocab.select($"w", lit(1).as("_in_v"))),
@@ -364,9 +365,9 @@ object TextStats extends QueryPack {
     import spark.implicits._
     graft.state.Materialize.purgeStopped(winnowSelCache)(_._1)
     winnowSelCache.computeIfAbsent((spark, dir), _ =>
-      graft.state.Materialize.pinRetained(
+      graft.state.Materialize.pin(
         winnowMins(Tables.documents(spark, dir))
-          .select($"doc_id", $"wmin").distinct()))
+          .select($"doc_id", $"wmin").distinct(), Policy.Retained))
   }
 
   /** The shared winnowing core: per-gram native md5 hashes →
@@ -463,7 +464,7 @@ object TextStats extends QueryPack {
     // gates pass the memoized [[winnowSelForDir]] frame instead.)
     winnowPairsCoreSel(
       winnowMins(docs).select($"doc_id", $"wmin").distinct()
-        .transform(graft.state.Materialize.pin),
+        .transform(graft.state.Materialize.pin(_, Policy.Always)),
       capOf)
   }
 
@@ -625,7 +626,7 @@ object TextStats extends QueryPack {
     var cur = base
       .select($"doc_id", explode(expr("sequence(0, len - 1)")).as("i"), $"text")
       .select($"doc_id", $"i", expr("graft_pack8(text, i)").as("r"))
-      .transform(graft.state.Materialize.pin)
+      .transform(graft.state.Materialize.pin(_, Policy.Always))
     var d = 7
     while (d < maxLen) {
       val byPos  = Window.partitionBy($"doc_id").orderBy($"i")
@@ -636,7 +637,7 @@ object TextStats extends QueryPack {
         .withColumn("r2", coalesce(lead($"r", d).over(byPos), lit(-1L)))
         .withColumn("r", dense_rank().over(byPair).cast("long"))
         .drop("r2")
-        .transform(graft.state.Materialize.pin)
+        .transform(graft.state.Materialize.pin(_, Policy.Always))
       d *= 2
     }
     cur.select($"doc_id", $"r", $"i".cast("long").as("sa_pos"))
@@ -1446,8 +1447,8 @@ object TextStats extends QueryPack {
     // and the denominator (the _total aggregate previously re-exploded
     // the whole corpus). counts then has two consumers → conditional pin
     // (vocabulary-bounded frame).
-    val counts = graft.state.Materialize.pinIfLarge(
-      tok.groupBy($"w").agg(count(lit(1)).as("cnt")))
+    val counts = graft.state.Materialize.pin(
+      tok.groupBy($"w").agg(count(lit(1)).as("cnt")), Policy.IfLarge)
     val top = counts.orderBy($"cnt".desc, $"w").limit(20)
     val wRank = Window.orderBy($"cnt".desc, $"w")
     val wCum = wRank.rowsBetween(Window.unboundedPreceding, Window.currentRow)

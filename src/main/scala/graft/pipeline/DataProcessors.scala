@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.config.Conf
+import graft.state.Materialize.Policy
 
 /** Config-drivable processors wrapping the engine's data-curation
   * operators (SURVEY.md §2 C36/C39), so a YAML pipeline can run the
@@ -756,8 +757,8 @@ final class SemDedupClustersProcessor(params: Conf) extends Transform {
     // census (itself a second upstream scan), ~4 upstream executions
     // for one stage (self-review r13 pass 3). Pinning also fires the
     // lazy guards here, which for a batch-only stage is strictly better
-    // (loud at the stage, not at the sink). pinScoped (pass 5): the
-    // corpus-sized pin is RELEASED in the finally — inside a
+    // (loud at the stage, not at the sink). The corpus-sized pin is
+    // RELEASED in the finally (pass 5) — inside a
     // foreach_batch sink this stage runs once per micro-batch, and an
     // unreleased pin per batch (or per failed retry) accumulates in
     // executor storage / reliable checkpoint files; the release walks
@@ -772,8 +773,8 @@ final class SemDedupClustersProcessor(params: Conf) extends Transform {
     // residual in checkpoint files, proven by ReliableFaultSpec's
     // bounded-file-count case. cleanCheckpoints=true remains
     // defense-in-depth, no longer a required mitigation.
-    val (corpus, releaseCorpus) = graft.state.Materialize.pinScoped(
-      EmbeddingStage.corpusFrom(df, idCol, embCol, "sem_dedup_clusters", census))
+    val corpus = graft.state.Materialize.pin(EmbeddingStage.corpusFrom(
+      df, idCol, embCol, "sem_dedup_clusters", census), Policy.Always)
     try {
       // undirected pair frame for the contraction: probe edges are
       // directed (q probed n's cell; the reverse edge may not exist), so
@@ -792,8 +793,8 @@ final class SemDedupClustersProcessor(params: Conf) extends Transform {
       // anti-join consumes only the drop pin and the raw input
       val (members, releaseLabels) =
         graft.ops.llm.Dedup.semDedupMembersScoped(corpus, pairs)
-      val (drop, releaseDrop) = graft.state.Materialize.pinScoped(
-        members.where(col("rn") > 1).select(col("vec_id").as(idCol)))
+      val drop = graft.state.Materialize.pin(members.where(col("rn") > 1)
+        .select(col("vec_id").as(idCol)), Policy.Always)
       // the drop pin (eager) was the labels pin's last consumer — free
       // the labels now; the drop pin itself is freed at a LATER
       // invocation once this output's consumption is OBSERVED (see
@@ -803,10 +804,10 @@ final class SemDedupClustersProcessor(params: Conf) extends Transform {
       releaseLabels()
       val obs = new org.apache.spark.sql.Observation(
         s"graft_semdedup_inflight_${SemDedupClustersProcessor.nextGen()}")
-      inFlight = (obs, releaseDrop) :: inFlight
+      inFlight = (obs, () => graft.state.Materialize.releasePinned(drop)) :: inFlight
       df.join(drop, Seq(idCol), "left_anti")
         .observe(obs, count(lit(1)).as("rows"))
-    } finally releaseCorpus()
+    } finally graft.state.Materialize.releasePinned(corpus)
   }
 }
 

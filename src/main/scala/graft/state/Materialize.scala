@@ -1,5 +1,6 @@
 package graft.state
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 
 /** Lineage-truncating materialization for iterative / multi-consumer
@@ -18,8 +19,8 @@ import org.apache.spark.sql.DataFrame
   * survives executor loss and frees block storage at the cost of one
   * write+read round trip.
   *
-  * Mode is read per-call from the session conf, so one session can flip
-  * it between queries:
+  * Mode is read per pin from the session conf, so one session can flip
+  * it between queries (a loop policy reads it once, when it is built):
   *   - `local` (default) — `df.localCheckpoint()` (eager)
   *   - `reliable`        — `df.checkpoint()` (eager). If no checkpoint
   *     dir is set: on a `local`/`local[*]` master a per-JVM temp dir is
@@ -53,6 +54,89 @@ final class MaxGauge {
 object Materialize {
 
   val ModeKey = "spark.graft.materialize"
+
+  private val log = graft.util.Log.logger("state.Materialize")
+
+  /** WHEN [[pin]] materializes a frame, named at every call site. */
+  sealed trait Policy
+  object Policy {
+
+    /** Pin unconditionally, in the session's mode. */
+    case object Always extends Policy
+
+    /** Pin iff Catalyst's size estimate crosses [[AdaptivePinBytesKey]];
+      * otherwise return the frame unchanged, so each consumer re-derives
+      * the (tiny) tower — cheaper than a pin barrier below the
+      * threshold, result-identical always (the towers are
+      * deterministic). Estimate-based, not measured: measuring requires
+      * materializing, which IS the cost being avoided; a wrong estimate
+      * can only cost performance (an over-estimate keeps the r17 pin —
+      * the status quo; an under-estimate re-derives per consumer), never
+      * correctness. Use for multi-consumer towers whose pin exists for
+      * CORPUS-scale pass reduction; iterative loop pins (2^T blowup
+      * without lineage truncation) must stay unconditional.
+      */
+    case object IfLarge extends Policy
+
+    /** [[Always]], additionally marking the newly-persisted RDD ids as
+      * retained, for SESSION-LIVED caches the debris sweep must spare.
+      * The ids are diffed around the pin; a lock confines the diff
+      * window so a concurrent Retained pin (e.g. parallel suites on a
+      * shared context) cannot have its ids attributed here (ADVICE r9).
+      * A concurrent plain pin inside the window is still possible and at
+      * worst exempts one sweepable pin from one sweep — stopped-context
+      * entries are purged on lookup either way.
+      */
+    case object Retained extends Policy
+
+    /** An iterative loop's resident pins, in the mode [[loop]] chose. */
+    final class Loop private[Materialize] (val mode: String) extends Policy
+
+    /** Pin mode for an iterative loop's RESIDENT frames, chosen from the
+      * loop's FIRST materialized pin (VERDICT r15 #3): r15 measured
+      * `materialize=reliable` — the documented cluster mode — as the
+      * FASTER shape once resident pinned state passes the single-JVM GC
+      * cliff, but the mode was only reachable as a global deployment
+      * flag. An explicitly configured session mode always wins —
+      * including an EXPLICIT `local`, which vetoes the autopilot (set
+      * vs unset is distinguished via `getOption`; an operator who sets
+      * local to avoid object-store checkpoint writes must get local —
+      * VERDICT r16 #2). Only when [[ModeKey]] is UNSET does the
+      * autopilot engage: a first pin whose measured block bytes exceed
+      * [[AutoReliableBytesKey]] (≤ 0 disables) upgrades the loop's
+      * remaining pins to reliable checkpoint files. Results are
+      * bit-identical across modes (law-tested); only residency changes.
+      *
+      * The mode is resolved ONCE, here, so the policy keeps it after
+      * `firstPin` is released (starComponents releases its first edge
+      * pin inside the loop; re-measuring then would read 0 bytes and
+      * silently drop to local). Mixing modes within one query is sound:
+      * both are eager materializations of the same plan.
+      */
+    def loop(firstPin: DataFrame): Loop = new Loop(loopResidency(firstPin))
+  }
+
+  /** Materialize `df` (lineage-truncated) under `policy`. */
+  def pin(df: DataFrame, policy: Policy): DataFrame = policy match {
+    case Policy.Always =>
+      materialize(df, df.sparkSession.conf.get(ModeKey, "local"))
+    case Policy.IfLarge =>
+      val thr = bytesConf(df, AdaptivePinBytesKey, AdaptivePinBytesDefault,
+        "pins unconditionally")
+      lazy val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
+      val large = thr <= 0 || est >= BigInt(thr)
+      if (log.isDebugEnabled) log.debug(s"[materialize] IfLarge pin=$large: " +
+        s"threshold $thr" + (if (thr > 0) s", estimate $est bytes" else ""))
+      if (large) pin(df, Policy.Always) else df
+    case Policy.Retained => retainLock.synchronized {
+      val sc = df.sparkSession.sparkContext
+      val before = sc.getPersistentRDDs.keySet
+      val out = pin(df, Policy.Always)
+      (sc.getPersistentRDDs.keySet -- before).foreach(retained.put(_, sc))
+      out
+    }
+    case l: Policy.Loop => materialize(df, l.mode)
+  }
 
   /** RDD ids pinned on behalf of a SESSION-LIVED cache (the memoized
     * [[graft.ops.llm.SuffixIndex]]): Bench's per-query debris sweep
@@ -90,22 +174,6 @@ object Materialize {
   }
 
   private val retainLock = new Object
-
-  /** [[pin]], additionally marking the newly-persisted RDD ids as
-    * retained. The ids are diffed around the pin; the lock confines the
-    * diff window so a concurrent `pinRetained` (e.g. parallel suites on a
-    * shared context) cannot have its ids attributed here (ADVICE r9). A
-    * concurrent plain [[pin]] inside the window is still possible and at
-    * worst exempts one sweepable pin from one sweep — stopped-context
-    * entries are purged on lookup either way.
-    */
-  def pinRetained(df: DataFrame): DataFrame = retainLock.synchronized {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val out = pin(df)
-    (sc.getPersistentRDDs.keySet -- before).foreach(retained.put(_, sc))
-    out
-  }
 
   /** Drop entries of a (SparkSession, …)-keyed session cache whose
     * session's context has stopped — the cached frames' blocks died with
@@ -145,15 +213,15 @@ object Materialize {
     */
   private[graft] def clearSessionCaches(): Unit = {
     // Snapshot the retained ids BEFORE the cache clears, and sweep only
-    // the snapshot: ids a racing pinRetained registers during/after the
+    // the snapshot: ids a racing Retained pin registers during/after the
     // clears are never swept, so a computeIfAbsent entry installing
     // mid-reset keeps live pins (if its entry got cleared instead, the
     // orphaned pins are collected by the NEXT reset — a one-cycle leak,
     // not a poison). Deliberately NOT serialized with retainLock: the
     // cache clears contend on computeIfAbsent bin locks whose mapping
-    // functions take retainLock inside pinRetained — holding it here
+    // functions take retainLock inside a Retained pin — holding it here
     // would deadlock. Residual (documented) window: a mapping that
-    // finished its pinRetained before the snapshot but installs its
+    // finished its Retained pin before the snapshot but installs its
     // entry after that cache's clear serves swept blocks — impossible
     // in this private API's sequential test usage, and the reason it
     // must not be promoted to a public surface as-is.
@@ -172,44 +240,25 @@ object Materialize {
     }
   }
 
-  /** [[pin]] plus a targeted RELEASE handle, for pins scoped to one
-    * eager computation (self-review r13 pass 5: a caller-side
-    * `getPersistentRDDs` keyset diff races every concurrent pin in the
-    * session and would unpersist a foreign lineage-truncated frame —
-    * dead blocks, the exact failure the retained-pin machinery
-    * prevents). The release walks the pinned frame's OWN lineage only:
-    * it unpersists the first persisted ancestors (the localCheckpoint
-    * blocks) and, in reliable mode, deletes the checkpoint FILES —
-    * ContextCleaner does not (`cleanCheckpoints` defaults false), so a
-    * per-micro-batch caller would otherwise grow shared storage without
-    * bound. Caller contract: release ONLY after every consumer of the
-    * pinned frame has fully materialized (a released localCheckpoint
-    * cannot recompute); safe in a `finally` — failures between pin and
-    * release must not leak a corpus-sized pin per retry.
-    */
-  def pinScoped(df: DataFrame): (DataFrame, () => Unit) = {
-    val pinned = pin(df)
-    (pinned, () => releasePinned(pinned))
-  }
-
-  /** The release half of [[pinScoped]], callable directly on a frame
-    * produced by [[pin]] whose every consumer has fully materialized:
-    * walks the frame's OWN lineage to its first persisted ancestors,
-    * unpersists them, and in reliable mode deletes their checkpoint
-    * FILES. Exposed separately (round 14) so iterative builders like
-    * `starComponents` can free SUPERSEDED round pins as soon as the
-    * next round is pinned — without it, a foreach_batch caller under
-    * `materialize=reliable` accrues one set of round-pin files per
-    * micro-batch that ContextCleaner never deletes.
+  /** Release a frame produced by [[pin]] whose every consumer has fully
+    * materialized (a released localCheckpoint cannot recompute; safe in
+    * a `finally` — failures between pin and release must not leak a
+    * corpus-sized pin per retry). Walks the frame's OWN lineage to its
+    * first persisted ancestors, unpersists them, and in reliable mode
+    * deletes their checkpoint FILES — ContextCleaner does not
+    * (`cleanCheckpoints` defaults false), so a per-micro-batch caller
+    * would otherwise grow shared storage without bound. Lineage-scoped,
+    * not a `getPersistentRDDs` keyset diff (self-review r13 pass 5): a
+    * diff races every concurrent pin in the session and would
+    * unpersist a foreign lineage-truncated frame. Iterative builders
+    * like `starComponents` free SUPERSEDED round pins with it as soon
+    * as the next round is pinned.
     */
   def releasePinned(df: DataFrame): Unit = {
     val sc = df.sparkSession.sparkContext
-    def walk(r: org.apache.spark.rdd.RDD[_]): Unit = {
-      val persisted =
-        r.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE
-      if (persisted) r.unpersist(blocking = false)
-      val ckpt = r.getCheckpointFile
-      ckpt.foreach { p =>
+    if (!sc.isStopped) pinRoots(df).foreach { r =>
+      if (isPersisted(r)) r.unpersist(blocking = false)
+      r.getCheckpointFile.foreach { p =>
         // NonFatal only, and LOUD on failure: a silent swallow here
         // re-opens the unbounded checkpoint-file growth this release
         // exists to close (a permissions change on the object store
@@ -220,21 +269,27 @@ object Materialize {
           val hp = new org.apache.hadoop.fs.Path(p)
           hp.getFileSystem(sc.hadoopConfiguration).delete(hp, true)
         } catch { case scala.util.control.NonFatal(e) =>
-          System.err.println(
-            s"[materialize] pin release failed to delete " +
+          log.warn(s"[materialize] pin release failed to delete " +
             s"checkpoint files at $p: $e — files LEAK until cleaned")
         }
       }
-      if (!persisted && ckpt.isEmpty)
-        r.dependencies.foreach(d => walk(d.rdd))
     }
-    if (!sc.isStopped) walk(df.rdd)
   }
 
-  def pin(df: DataFrame): DataFrame =
-    pinWith(df, df.sparkSession.conf.get(ModeKey, "local"))
+  private def isPersisted(r: RDD[_]): Boolean =
+    r.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE
 
-  /** Size threshold (bytes) for [[pinIfLarge]] — the conditional-pin
+  /** A pinned frame's pins: the first persisted (localCheckpoint) or
+    * checkpointed (reliable) ancestors on its OWN lineage.
+    */
+  private def pinRoots(df: DataFrame): Seq[RDD[_]] = {
+    def walk(r: RDD[_]): Seq[RDD[_]] =
+      if (isPersisted(r) || r.getCheckpointFile.isDefined) Seq(r)
+      else r.dependencies.flatMap(d => walk(d.rdd))
+    walk(df.rdd)
+  }
+
+  /** Size threshold (bytes) for [[Policy.IfLarge]] — the conditional-pin
     * gate for sub-corpus multi-consumer towers (r18, VERDICT r17 #3).
     * Default 64 MiB of OPTIMIZER-ESTIMATED frame bytes: the r17 wave
     * pinned every multi-consumer tower unconditionally, which bought
@@ -249,43 +304,10 @@ object Materialize {
   val AdaptivePinBytesKey = "spark.graft.pin.minBytes"
   val AdaptivePinBytesDefault: Long = 64L << 20
 
-  /** [[pin]] iff Catalyst's size estimate for `df` crosses
-    * [[AdaptivePinBytesKey]]; otherwise returns `df` unchanged, so each
-    * consumer re-derives the (tiny) tower — cheaper than a pin barrier
-    * below the threshold, result-identical always (the towers are
-    * deterministic). Estimate-based, not measured: measuring requires
-    * materializing, which IS the cost being avoided; a wrong estimate
-    * can only cost performance (an over-estimate keeps the r17 pin —
-    * the status quo; an under-estimate re-derives per consumer), never
-    * correctness. Use for multi-consumer towers whose pin exists for
-    * CORPUS-scale pass reduction; iterative loop pins (2^T blowup
-    * without lineage truncation) must stay unconditional.
+  /** A pin in an explicit mode: eager either way, so the two modes
+    * produce bit-identical frames (law-tested in GraphSpec).
     */
-  def pinIfLarge(df: DataFrame): DataFrame = {
-    val thrRaw = df.sparkSession.conf
-      .get(AdaptivePinBytesKey, AdaptivePinBytesDefault.toString)
-    val thr = try thrRaw.trim.toLong catch {
-      case _: NumberFormatException => throw new IllegalArgumentException(
-        s"$AdaptivePinBytesKey: expected a byte count (long, e.g. " +
-        s"67108864; <= 0 pins unconditionally), got '$thrRaw'")
-    }
-    if (thr <= 0 ||
-        df.queryExecution.optimizedPlan.stats.sizeInBytes >= BigInt(thr))
-      pin(df)
-    else df
-  }
-
-  /** [[pin]] with the mode decided by the CALLER instead of the session
-    * conf — the per-operator escape hatch for iterative loops
-    * (VERDICT r15 #3): one query can pin its loop-resident frames as
-    * reliable checkpoint files while the rest of the session keeps the
-    * local default, without flipping a session-global conf mid-query
-    * (which would race concurrent queries on the same session). The
-    * two modes produce bit-identical frames (both are eager
-    * materializations of the same plan — law-tested in GraphSpec), so
-    * mixing them within one query is sound.
-    */
-  def pinWith(df: DataFrame, mode: String): DataFrame = {
+  private def materialize(df: DataFrame, mode: String): DataFrame = {
     val spark = df.sparkSession
     mode match {
       case "local" => df.localCheckpoint()
@@ -319,15 +341,7 @@ object Materialize {
   def pinnedBytes(df: DataFrame): Long = {
     val sc = df.sparkSession.sparkContext
     if (sc.isStopped) return 0L
-    val ids = scala.collection.mutable.Set.empty[Int]
-    def walk(r: org.apache.spark.rdd.RDD[_]): Unit = {
-      val persisted =
-        r.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE
-      if (persisted) ids += r.id
-      else if (r.getCheckpointFile.isEmpty)
-        r.dependencies.foreach(d => walk(d.rdd))
-    }
-    walk(df.rdd)
+    val ids = pinRoots(df).filter(isPersisted).map(_.id).toSet
     sc.getRDDStorageInfo.iterator
       .filter(info => ids.contains(info.id))
       .map(info => info.memSize + info.diskSize).sum
@@ -335,7 +349,7 @@ object Materialize {
 
   /** Threshold (bytes) above which an iterative loop's resident pins
     * auto-upgrade from local blocks to reliable checkpoint files — see
-    * [[loopMode]]. Default 256 MiB of measured first-pin bytes: far
+    * [[Policy.loop]]. Default 256 MiB of measured first-pin bytes: far
     * above any bench-gate graph (the sf0.1 co-occurrence edge pin is
     * ~10–20 MB) and far below the r15-measured single-JVM GC cliff
     * (the 64-replica PageRank edge pin, where local pins stalled
@@ -343,70 +357,57 @@ object Materialize {
     * docs/cluster-posture.md). ≤ 0 disables the auto choice.
     */
   val AutoReliableBytesKey = "spark.graft.iterative.reliablePinBytes"
-  val AutoReliableBytesEnv = "SPARK_GRAFT_ITER_RELIABLE_BYTES"
   val AutoReliableBytesDefault: Long = 256L << 20
 
-  /** Pin mode for an iterative loop's RESIDENT frames, chosen from the
-    * loop's FIRST materialized pin (VERDICT r15 #3): r15 measured
-    * `materialize=reliable` — the documented cluster mode — as the
-    * FASTER shape once resident pinned state passes the single-JVM GC
-    * cliff, but the mode was only reachable as a global deployment
-    * flag. This gives every loop a per-operator escape with no env var
-    * set: an explicitly configured session mode always wins — including
-    * an EXPLICIT `local`, which vetoes the autopilot (set vs unset is
-    * distinguished via `getOption`; an operator who sets local to avoid
-    * object-store checkpoint writes must get local — VERDICT r16 #2).
-    * Only when [[ModeKey]] is UNSET does the autopilot engage: a first
-    * pin whose measured block bytes exceed [[AutoReliableBytesKey]]
-    * (conf, else [[AutoReliableBytesEnv]], else 256 MiB; ≤ 0 disables)
-    * upgrades the loop's remaining pins to reliable checkpoint files.
-    * Results are bit-identical across modes (law-tested); only
-    * residency changes.
-    */
-  def loopMode(firstPin: DataFrame): String = {
-    val conf = firstPin.sparkSession.conf
-    val configured = conf.getOption(ModeKey)
-    if (configured.isDefined) configured.get
-    else {
-      // loud parse (VERDICT r16 #3): a malformed threshold must name
-      // the conf key / env var it came from and the expected format,
-      // not surface as a bare NumberFormatException mid-query
-      val (thrSrc, thrRaw) = conf.getOption(AutoReliableBytesKey)
-        .map((AutoReliableBytesKey, _))
-        .orElse(sys.env.get(AutoReliableBytesEnv)
-          .map((AutoReliableBytesEnv, _)))
-        .getOrElse(("default", AutoReliableBytesDefault.toString))
-      val thr = try thrRaw.trim.toLong catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"$thrSrc: expected a byte count (long, e.g. 268435456; <= 0 " +
-          s"disables the reliable-pin autopilot), got '$thrRaw'")
-      }
-      val bytes = if (thr > 0) pinnedBytes(firstPin) else -1L
-      if (thr > 0 && bytes >= thr) {
-        // the upgrade must never convert a WORKING query into a hard
-        // failure: on a non-local master with no checkpoint dir,
-        // pinWith(reliable) fails fast by design (a driver-local temp
-        // dir would defeat executor-loss survival) — there the
-        // autopilot stays local and says why, instead of failing a
-        // query that plain local pins would have carried (r16
-        // self-review)
-        val sc = firstPin.sparkSession.sparkContext
-        if (sc.getCheckpointDir.isEmpty && !sc.isLocal) {
-          System.err.println(s"[materialize] loop pins NOT upgraded " +
-            s"despite first pin $bytes bytes >= threshold $thr: no " +
-            "spark.checkpoint.dir on a cluster master — set one " +
-            "(shared reliable storage) to enable the faster " +
-            "checkpoint-file residency for corpus-scale loops")
-          "local"
+  private def loopResidency(firstPin: DataFrame): String =
+    firstPin.sparkSession.conf.getOption(ModeKey) match {
+      case Some(configured) => configured
+      case None =>
+        val thr = bytesConf(firstPin, AutoReliableBytesKey,
+          AutoReliableBytesDefault, "disables the reliable-pin autopilot")
+        val bytes = if (thr > 0) pinnedBytes(firstPin) else -1L
+        if (thr > 0 && bytes >= thr) {
+          // the upgrade must never convert a WORKING query into a hard
+          // failure: on a non-local master with no checkpoint dir,
+          // a reliable pin fails fast by design (a driver-local temp
+          // dir would defeat executor-loss survival) — there the
+          // autopilot stays local and says why, instead of failing a
+          // query that plain local pins would have carried (r16
+          // self-review)
+          val sc = firstPin.sparkSession.sparkContext
+          if (sc.getCheckpointDir.isEmpty && !sc.isLocal) {
+            log.warn(s"[materialize] loop pins NOT upgraded " +
+              s"despite first pin $bytes bytes >= threshold $thr: no " +
+              "spark.checkpoint.dir on a cluster master — set one " +
+              "(shared reliable storage) to enable the faster " +
+              "checkpoint-file residency for corpus-scale loops")
+            "local"
+          } else {
+            // once per upgrade: the probe/bench reader must be able to
+            // tell WHICH residency the loop ran with (the two modes'
+            // perf differs exactly in the regime this fires in)
+            log.info(s"[materialize] loop pins upgraded to " +
+              s"reliable: first pin $bytes bytes >= threshold $thr")
+            "reliable"
+          }
         } else {
-          // loud once per upgrade: the probe/bench reader must be able
-          // to tell WHICH residency the loop ran with (the two modes'
-          // perf differs exactly in the regime this fires in)
-          System.err.println(s"[materialize] loop pins upgraded to " +
-            s"reliable: first pin $bytes bytes >= threshold $thr")
-          "reliable"
+          log.debug(s"[materialize] loop pins stay local: threshold $thr" +
+            (if (thr > 0) s", first pin $bytes bytes" else ""))
+          "local"
         }
-      } else "local"
+    }
+
+  /** A byte-count conf key, parsed LOUDLY (VERDICT r16 #3): a malformed
+    * value names its key, the expected format and what ≤ 0 means, not a
+    * bare NumberFormatException mid-query.
+    */
+  private def bytesConf(df: DataFrame, key: String, default: Long,
+                        nonPositive: String): Long = {
+    val raw = df.sparkSession.conf.get(key, default.toString)
+    try raw.trim.toLong catch {
+      case _: NumberFormatException => throw new IllegalArgumentException(
+        s"$key: expected a byte count (long, e.g. $default; <= 0 " +
+        s"$nonPositive), got '$raw'")
     }
   }
 }

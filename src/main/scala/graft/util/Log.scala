@@ -44,4 +44,15 @@ object Log {
   /** Set the base framework level (logger.py:57-58). */
   def setLevel(level: Level): Unit =
     Configurator.setLevel(DefaultLoggerName, level)
+
+  /** Stage laps at DEBUG on `log` (`[prefix] tag: Ns` since the last
+    * lap); with DEBUG off at creation nothing is timed or formatted. */
+  final class Laps(log: Logger, prefix: String) {
+    val enabled: Boolean = log.isDebugEnabled
+    private var t0 = if (enabled) System.nanoTime() else 0L
+    def apply(tag: => String): Unit = if (enabled) {
+      log.debug(f"[$prefix] $tag: ${(System.nanoTime() - t0) / 1e9}%.1fs")
+      t0 = System.nanoTime()
+    }
+  }
 }

@@ -86,28 +86,20 @@ class BenchSpec extends AnyFunSuite {
     }
   }
 
-  test("snapshotQueries still reads the object form and the raw-tail " +
-       "fragment form of older snapshots") {
+  test("snapshotQueries reads the object form; a snapshot without " +
+       "decodable queries decodes empty with a degraded-decode note") {
     val obj = """{"parsed":{"queries":{"q_a":1.5,"q_b":0.25}}}"""
     assert(Bench.snapshotQueries(obj, Seq("q_a", "q_b"))._1 ===
       Map("q_a" -> 1.5, "q_b" -> 0.25))
     val direct = """{"queries":{"q_a":2.5}}"""
     assert(Bench.snapshotQueries(direct, Seq("q_a"))._1 === Map("q_a" -> 2.5))
-    val tail = """{"parsed":null,"tail":"ame_x\":9.99,\"q_c\":3.25,\"q_d\":0.75}"}"""
-    val (got, tnote) = Bench.snapshotQueries(tail, Seq.empty)
-    assert(got === Map("q_c" -> 3.25, "q_d" -> 0.75),
-      "boundary-cut pair must be dropped, clean pairs recovered")
-    // the tail branch recovers only whatever survives the 2000-char
-    // scrape window — it must say so like the positional fallback does,
-    // or BENCH_REGRESS.md reports a silently shrunken comparable set
-    // (ADVICE r13)
-    // ": 2 pairs recovered" — the count token anchored on both sides:
-    // a bare "2" matched the note's "2000-char" (ADVICE r14), and
-    // "2 pairs" still matched any count ENDING in 2, e.g. "12 pairs"
-    // (ADVICE r15)
-    assert(tnote.exists(n => n.contains("UNCHECKED") &&
-        n.contains(": 2 pairs recovered")),
-      s"tail decode must carry a loud degraded-decode note, got $tnote")
+    // a scrape-failed snapshot: BENCH_REGRESS.md must still say why
+    // nothing was compared
+    val (got, note) = Bench.snapshotQueries(
+      """{"parsed":null,"tail":"\"q_c\":3.25,\"q_d\":0.75}"}""", Seq("q_c"))
+    assert(got.isEmpty)
+    assert(note.exists(_.contains("UNCHECKED")),
+      s"an empty decode must carry a degraded-decode note, got $note")
   }
 
   test("truncated last-resort view keeps the slowest queries and reports " +
@@ -191,18 +183,6 @@ class BenchSpec extends AnyFunSuite {
     }
   }
 
-  test("pre-r11 snapshot without a flag derives contention from its loads") {
-    // r10-shaped: no contended field; load_start 1.74 >= 1.5 ⇒ contended,
-    // so the clean r9 wins
-    withDir(Map(
-      "BENCH_r10.json" -> snap(None, Some((1.74, 2.35))),
-      "BENCH_r09.json" -> snap(None, Some((0.3, 1.2))))) { dir =>
-      val pick = Bench.pickBaseline(dir).get
-      assert(pick.round === 9)
-      assert(pick.cleanCertified)
-    }
-  }
-
   test("all-contended falls back to the newest, flagged uncertified") {
     withDir(Map(
       "BENCH_r11.json" -> snap(Some(true)),
@@ -225,19 +205,14 @@ class BenchSpec extends AnyFunSuite {
     }
   }
 
-  test("snapshotContended reads flag, derives from loads, recovers from tail") {
+  test("snapshotContended reads the explicit flag; a snapshot without " +
+       "one is not certifiable") {
     assert(Bench.snapshotContended(snap(Some(true))) === Some(true))
     assert(Bench.snapshotContended(snap(Some(false))) === Some(false))
-    assert(Bench.snapshotContended(snap(None, Some((3.0, 1.0)))) === Some(true))
-    assert(Bench.snapshotContended(snap(None, Some((0.2, 1.0)))) === Some(false))
-    // tail-only (driver scrape failed): explicit flag wins
-    val tailFlag = """{"parsed":null,"tail":"...\"contended\":true,..."}"""
-    assert(Bench.snapshotContended(tailFlag) === Some(true))
-    // tail-only, pre-flag shape: derive from the loads in the fragment
-    val tailLoads =
-      """{"parsed":null,"tail":"\"load_start\":0.11,\"load_end\":0.9,"}"""
-    assert(Bench.snapshotContended(tailLoads) === Some(false))
-    // nothing recoverable: not certifiable
+    // unflagged (pre-r11 loads only, or a scrape-failed tail): None
+    assert(Bench.snapshotContended(snap(None, Some((0.2, 1.0)))) === None)
+    assert(Bench.snapshotContended(
+      """{"parsed":null,"tail":"...\"contended\":true,..."}""") === None)
     assert(Bench.snapshotContended("""{"parsed":null,"tail":"junk"}""") === None)
     assert(Bench.snapshotContended("not json at all") === None)
   }

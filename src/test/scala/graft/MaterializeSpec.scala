@@ -1,6 +1,7 @@
 package graft
 
 import graft.state.Materialize
+import graft.state.Materialize.Policy
 
 /** `spark.graft.materialize=reliable` must be a pure execution-strategy
   * switch: every pipeline that pins intermediates (winnow pairs, MinHash
@@ -40,19 +41,20 @@ class MaterializeSpec extends SparkSpec {
     }
   }
 
-  test("pinScoped releases EXACTLY its own pin: the pinned frame's " +
+  test("releasePinned releases EXACTLY its own pin: the pinned frame's " +
        "blocks leave persistent storage on release, a concurrently " +
-       "pinned frame's blocks survive, and the released handle is safe " +
-       "to call with other pins live (self-review r13 pass 5 — a " +
+       "pinned frame's blocks survive, and releasing again is safe " +
+       "with other pins live (self-review r13 pass 5 — a " +
        "keyset-diff release would have swept the bystander)") {
     import spark.implicits._
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
     // a bystander pin created in the same window
     val bystander = Materialize.pin(
-      spark.range(1000).select($"id", ($"id" * 2).as("x")))
-    val (scoped, release) = Materialize.pinScoped(
-      spark.range(5000).select($"id", ($"id" % 7).as("y")))
+      spark.range(1000).select($"id", ($"id" * 2).as("x")), Policy.Always)
+    val scoped = Materialize.pin(
+      spark.range(5000).select($"id", ($"id" % 7).as("y")), Policy.Always)
+    def release(): Unit = Materialize.releasePinned(scoped)
     assert(scoped.count() === 5000L)
     val pinnedIds = sc.getPersistentRDDs.keySet -- before
     assert(pinnedIds.size >= 2, "both pins must be registered")
@@ -67,13 +69,12 @@ class MaterializeSpec extends SparkSpec {
     assert(bystander.count() === 1000L)
   }
 
-  test("pinScoped under reliable mode deletes the checkpoint files on " +
-       "release (ContextCleaner does not; a per-micro-batch caller " +
+  test("releasePinned under reliable mode deletes the checkpoint files " +
+       "(ContextCleaner does not; a per-micro-batch caller " +
        "would grow shared storage without bound)") {
     import spark.implicits._
     withMode("reliable") {
-      val (scoped, release) = Materialize.pinScoped(
-        spark.range(100).select($"id"))
+      val scoped = Materialize.pin(spark.range(100).select($"id"), Policy.Always)
       assert(scoped.count() === 100L)
       val ckptDir = spark.sparkContext.getCheckpointDir.get
       def ckptFiles(): Long =
@@ -85,7 +86,7 @@ class MaterializeSpec extends SparkSpec {
           .filter(java.nio.file.Files.isRegularFile(_)).count()
       val withPin = ckptFiles()
       assert(withPin > 0, "reliable pin must have written checkpoint files")
-      release()
+      Materialize.releasePinned(scoped)
       assert(ckptFiles() < withPin,
         "release must delete the pin's checkpoint files")
     }
@@ -102,7 +103,7 @@ class MaterializeSpec extends SparkSpec {
     assert(e.getMessage.contains("spark.graft.materialize"))
   }
 
-  test("pinIfLarge pins both regimes identically (r18, VERDICT r17 #3): " +
+  test("Policy.IfLarge pins both regimes identically (r18, VERDICT r17 #3): " +
        "results equal whether the tower pins or re-derives, the pin " +
        "engages above the threshold and skips below it") {
     import org.apache.spark.sql.functions._
@@ -117,19 +118,19 @@ class MaterializeSpec extends SparkSpec {
       try f finally spark.conf.unset(Materialize.AdaptivePinBytesKey)
     }
     // far-above threshold: the tiny frame is returned UNPINNED
-    val skipped = withThr((1L << 40).toString)(Materialize.pinIfLarge(df))
+    val skipped = withThr((1L << 40).toString)(Materialize.pin(df, Policy.IfLarge))
     assert(!isPinned(skipped), "sub-threshold tower must skip the pin")
     // 1-byte threshold: every frame pins
-    val pinned = withThr("1")(Materialize.pinIfLarge(df))
+    val pinned = withThr("1")(Materialize.pin(df, Policy.IfLarge))
     assert(isPinned(pinned), "above-threshold tower must pin")
     // <= 0 disables the gate: unconditional pin
-    val forced = withThr("0")(Materialize.pinIfLarge(df))
+    val forced = withThr("0")(Materialize.pin(df, Policy.IfLarge))
     assert(isPinned(forced), "thr <= 0 must pin unconditionally")
     // both regimes are result-identical
     assert(canon(skipped) == canon(pinned))
     // a malformed threshold names its key
     val err = withThr("lots") {
-      intercept[IllegalArgumentException](Materialize.pinIfLarge(df))
+      intercept[IllegalArgumentException](Materialize.pin(df, Policy.IfLarge))
     }
     assert(err.getMessage.contains(Materialize.AdaptivePinBytesKey))
     // and a production gate is result-identical under both regimes

@@ -175,23 +175,19 @@ class GraphSpec extends SparkSpec {
     assert(expR(1L) > 150000L)
   }
 
-  test("pagerankFrom is bit-identical at every pin cadence (the r14 " +
-       "spark.graft.pagerank.pinCadence knob changes WHEN lineage is " +
-       "truncated, never the integer arithmetic) and validates the knob") {
+  test("pagerankFrom is bit-identical at every pin cadence (the " +
+       "cadence changes WHEN lineage is truncated, never the integer " +
+       "arithmetic) and rejects cadence 0") {
     import spark.implicits._
     val es = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L),
                  (5L, 4L), (6L, 1L))
-    val key = "spark.graft.pagerank.pinCadence"
-    def at(c: String): Seq[(Long, Long)] = {
-      spark.conf.set(key, c)
-      try Graph.pagerankFrom(es.toDF("a", "b"))
+    def at(c: Int): Seq[(Long, Long)] =
+      Graph.pagerankFrom(es.toDF("a", "b"), cadence = c)
         .as[(Long, Long)].collect().toSeq.sorted
-      finally spark.conf.unset(key)
-    }
-    val Seq(c1, c2, c5) = Seq("1", "2", "5").map(at)
+    val Seq(c1, c2, c5) = Seq(1, 2, 5).map(at)
     assert(c1 === c5 && c2 === c5 && c5.nonEmpty)
-    val e = intercept[IllegalArgumentException] { at("0") }
-    assert(e.getMessage.contains("pinCadence"))
+    val e = intercept[IllegalArgumentException] { at(0) }
+    assert(e.getMessage.contains("cadence"))
   }
 
   test("the graph family is bit-identical across pin modes — local, " +

@@ -745,6 +745,9 @@ class PlanSpec extends SparkSpec {
   // reverts the posture. Plans are read AFTER execution (AQE finalizes
   // join strategies at runtime).
 
+  private def pin(df: org.apache.spark.sql.DataFrame) =
+    graft.state.Materialize.pin(df, graft.state.Materialize.Policy.Always)
+
   private def finalPlan(df: org.apache.spark.sql.DataFrame): String = {
     df.collect()
     df.queryExecution.executedPlan.toString
@@ -763,7 +766,6 @@ class PlanSpec extends SparkSpec {
        "never broadcast (the r14 m² weak-scaling hazard)") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val pin = graft.state.Materialize.pin _
     val e = Graph.edgesAt(spark, dir, 45)
     val u = pin(e.select($"a".as("w1"), $"b".as("w2"))
       .union(e.select($"b".as("w1"), $"a".as("w2"))))
@@ -784,7 +786,6 @@ class PlanSpec extends SparkSpec {
        "dangling-mass share (a BroadcastNestedLoopJoin cross, by design)") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val pin = graft.state.Materialize.pin _
     val e = Graph.edgesAt(spark, dir, 45)
     val ed = pin(e.select($"a".as("w1"), $"b".as("w2")))
     val outw = ed.groupBy($"w1").agg(count(lit(1)).as("out_w"))
@@ -806,7 +807,6 @@ class PlanSpec extends SparkSpec {
        "edge list is never a broadcast build side") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val pin = graft.state.Materialize.pin _
     val e = pin(Graph.edgesAt(spark, dir, 25))
     val deg = e.select($"a".as("v")).union(e.select($"b".as("v")))
       .groupBy($"v").agg(count(lit(1)).as("deg"))
@@ -824,7 +824,6 @@ class PlanSpec extends SparkSpec {
        "small frontier per level)") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val pin = graft.state.Materialize.pin _
     val e = Graph.edgesAt(spark, dir, 45)
     val u = pin(e.select($"a".as("v"), $"b".as("w"))
       .union(e.select($"b".as("v"), $"a".as("w"))))
@@ -840,7 +839,6 @@ class PlanSpec extends SparkSpec {
   test("star contraction: the large-star and small-star minima joins stay " +
        "ShuffledHashJoin over a pinned stat-less edge frame") {
     import spark.implicits._
-    val pin = graft.state.Materialize.pin _
     val e = Graph.edgesAt(spark, dir, 45)
     val pairs = pin(e.select($"a".as("u"), $"b".as("v")))
     assertShuffledNeverBroadcast(

@@ -518,7 +518,8 @@ object ScaleProbe {
     // verdict was noise (measured: ±3x run-to-run at the same rung).
     lazy val graphBase = {
       val e = graft.ops.Graph.edgesAt(spark, sfDir, 25)
-        .transform(graft.state.Materialize.pinRetained)
+        .transform(graft.state.Materialize.pin(_,
+          graft.state.Materialize.Policy.Retained))
       requireIdsInStride(e.select($"a".as("id")), "id", s"$sfDir graph a-side")
       requireIdsInStride(e.select($"b".as("id")), "id", s"$sfDir graph b-side")
       e

@@ -36,4 +36,15 @@ class LogSpec extends AnyFunSuite {
     try assert(Log.logger("inheriting").getLevel === Level.WARN)
     finally Log.setLevel(Level.ERROR)
   }
+
+  test("Laps time and format only when DEBUG is enabled at creation") {
+    var built = 0
+    def tag = { built += 1; "stage" }
+    val off = new Log.Laps(Log.logger("laps.off", Level.INFO), "off")
+    off(tag)
+    assert(!off.enabled && built === 0, "DEBUG off must not build the tag")
+    val on = new Log.Laps(Log.logger("laps.on", Level.DEBUG), "on")
+    on(tag)
+    assert(on.enabled && built === 1)
+  }
 }
