@@ -3,6 +3,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.MapType
 import java.nio.file.{Files, Paths}
+import graft.ops.llm.{Dedup, SuffixIndex}
+import graft.state.Materialize
 
 /** Per-round benchmark: times every declared query at the SF the driver
   * points at (sf0.1 by default) and emits one JSON line (stdout + file).
@@ -128,6 +130,7 @@ object Bench {
     val wall0 = System.nanoTime()
     val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
+    graft.util.Log.setLevel(org.apache.logging.log4j.Level.INFO)
     // Warmup: run the flagship once so the first timed query doesn't absorb
     // JVM/codegen/parquet-reader initialization (VERDICT r1 noted the first
     // query's time was mostly warmup).
@@ -147,7 +150,7 @@ object Bench {
       // Per-query debris sweep (VERDICT r4 #2: without it, inherited
       // storage pressure caused the r4 llm_winnow_pairs 78×
       // official-vs-isolated anomaly).
-      graft.state.Materialize.sweepDebris(spark)
+      Materialize.sweepDebris(spark)
       val times = (1 to reps).flatMap { _ =>
         // Drain the async cleanup backlog (shuffle files, broadcasts) from
         // prior queries before timing: 60 queries in one JVM otherwise
@@ -215,10 +218,10 @@ object Bench {
       // the one-time cold SuffixIndex build the medians exclude (rep 1
       // absorbs it) — published in the artifact so the accounting is
       // machine-readable (−1 when no suffix gate ran this sweep)
-      s""""suffix_index_cold_s":${graft.ops.llm.SuffixIndex.lastBuildSeconds},""" +
+      s""""suffix_index_cold_s":${Materialize.coldBuilds(SuffixIndex.MemoName).maxSeconds},""" +
       // same accounting for the r11 memoized span frame shared by the
       // two substring gates
-      s""""span_frame_cold_s":${graft.ops.llm.Dedup.spanFrameColdSeconds}},""" +
+      s""""span_frame_cold_s":${Materialize.coldBuilds(Dedup.SpanMemoName).maxSeconds}},""" +
       // the ≤2× perf gate's denominator, pinned IN the artifact so a
       // loaded-host run overwriting BENCH.json can't silently shift it:
       // the recorded round-5 full-sweep snapshot (221 queries, sf0.1,

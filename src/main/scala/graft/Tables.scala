@@ -72,7 +72,7 @@ object Tables {
     * Per-table failure isolation: one unreadable/drifted fixture must not
     * kill the whole catalog (round 6: a broken `events` took down all ten
     * `sql_*` gates though nine never scan events). A failing table is
-    * skipped with its error on stderr; only queries that actually reference
+    * skipped with its error logged at WARN; only queries that actually reference
     * it then fail, with "table not found: <n>" plus the logged cause.
     *
     * Memoized per (session, dir): every `sql_*` gate calls this before its
@@ -85,15 +85,17 @@ object Tables {
     */
   private val registered = new ConcurrentHashMap[SparkSession, String]()
 
+  private val log = graft.util.Log.logger("Tables")
+
   def registerViews(s: SparkSession, d: String): Unit = {
-    // same stopped-session hygiene as the SuffixIndex/pair caches
-    // (ADVICE r9): entries for stopped sessions are dead weight
+    // same stopped-session hygiene as the memo layer (ADVICE r9):
+    // entries for stopped sessions are dead weight
     graft.state.Materialize.purgeStopped(registered)(identity)
     if (d == registered.get(s)) return
     def reg(n: String)(df: => DataFrame): Unit =
       try df.createOrReplaceTempView(n)
       catch { case NonFatal(e) =>
-        System.err.println(s"[graft] registerViews: skipping view '$n': ${e.getMessage}")
+        log.warn(s"[graft] registerViews: skipping view '$n': ${e.getMessage}")
       }
     Seq("region", "nation", "customer", "supplier", "part", "orders",
         "lineitem", "documents", "embeddings")

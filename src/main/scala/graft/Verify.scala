@@ -16,6 +16,7 @@ object Verify {
     sys.env.get("SPARK_GRAFT_MATERIALIZE")
       .foreach(m => spark.conf.set(graft.state.Materialize.ModeKey, m))
     spark.sparkContext.setLogLevel("WARN")
+    graft.util.Log.setLevel(org.apache.logging.log4j.Level.INFO)
     new java.io.File(outDir).mkdirs()
     // Local-dev focus filter (same contract as SPARK_GRAFT_BENCH_ONLY):
     // comma-list of query names. Unset for the driver → full dump.

@@ -702,21 +702,13 @@ object Dedup extends QueryPack {
     * exact pipeline (`llm_dedup_minhash`, `llm_dedup_clusters`,
     * `llm_dedup_editdist`, and the survivors policy via clusters), and
     * each previously re-ran the shingle/banding/verify chain from the
-    * scan. The verified pair frame is tiny (LSH-bounded), so the cache
-    * pins a few hundred rows while the build is paid once — same
-    * contract and same Bench-sweep-survival (`Policy.Retained`) as
-    * [[SuffixIndex]]; see COVERAGE.md's bench-attribution note.
+    * scan. The verified pair frame is tiny (LSH-bounded), so the memo
+    * pins a few hundred rows while the build is paid once; see
+    * COVERAGE.md's bench-attribution note.
     */
-  private val pairsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  graft.state.Materialize.registerSessionCache(() => pairsCache.clear())
-
-  private[graft] def nearDupPairs(spark: SparkSession, dir: String): DataFrame = {
-    graft.state.Materialize.purgeStopped(pairsCache)(_._1)
-    pairsCache.computeIfAbsent((spark, dir), _ =>
-      nearDupPairsUncached(spark, dir)
-        .transform(graft.state.Materialize.pin(_, Policy.Retained)))
-  }
+  private[graft] def nearDupPairs(spark: SparkSession, dir: String): DataFrame =
+    graft.state.Materialize.memo(spark, "minhash_pairs", dir)(
+      graft.state.Materialize.pin(nearDupPairsUncached(spark, dir), _))
 
   private def nearDupPairsUncached(spark: SparkSession, dir: String): DataFrame =
     nearDupPairsFrom(Tables.documents(spark, dir)
@@ -1191,16 +1183,6 @@ object Dedup extends QueryPack {
     */
   private[graft] val IvfMinCells = 4
 
-  /** Memoized corpus row counts for [[ivfCellsFor]], keyed by the
-    * CANONICALIZED logical plan (two references to the same corpus —
-    * e.g. the cells frame and the probe frame of one search — must
-    * resolve the SAME K, and the count must not re-run per reference).
-    */
-  private val ivfCountCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
-    java.lang.Long]()
-  graft.state.Materialize.registerSessionCache(() => ivfCountCache.clear())
-
   /** Resolve the coarse-quantizer cell count for a FULL corpus frame —
     * see [[IvfCellsKey]]. Call once per operation at the top level and
     * thread K down: resolving from a SUB-FILTERED frame (e.g. a query
@@ -1230,10 +1212,12 @@ object Dedup extends QueryPack {
           "a target rows-per-cell (<= 0 pins K to the floor)")
         if (target <= 0) IvfMinCells
         else {
-          graft.state.Materialize.purgeStopped(ivfCountCache)(_._1)
-          val n: Long = ivfCountCache.computeIfAbsent(
-            (spark, corpus.queryExecution.logical.canonicalized),
-            _ => corpus.count())
+          // memoized per CANONICALIZED logical plan: two references to
+          // the same corpus — e.g. the cells frame and the probe frame of
+          // one search — must resolve the SAME K, and the count must not
+          // re-run per reference
+          val n = graft.state.Materialize.memo(spark, "ivf_count",
+            corpus.queryExecution.logical.canonicalized)(_ => corpus.count())
           val k = math.max(IvfMinCells.toLong, (n + target - 1) / target)
           require(k <= Int.MaxValue,
             s"IVF cell count $k overflows Int (rows=$n, target=$target)")
@@ -1324,24 +1308,19 @@ object Dedup extends QueryPack {
   /** Memoized gate-facing form of [[embeddingPairs]] — round 9:
     * `llm_dedup_embedding_approx` and `llm_semdedup` run the identical
     * (thr, sameCellOnly) cell-shuffle pair engine; the verified pair
-    * frame is tiny, so cache it per (session, dir, params) with the
-    * same sweep-surviving pin contract as [[nearDupPairs]].
+    * frame is tiny, so memoize it per (session, dir, params) like
+    * [[nearDupPairs]].
     */
-  private val embPairsCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Double, Boolean, Int), DataFrame]()
-  graft.state.Materialize.registerSessionCache(() => embPairsCache.clear())
-
   private def embeddingPairsCached(spark: SparkSession, dir: String,
                                    thr: Double, sameCellOnly: Boolean): DataFrame = {
-    graft.state.Materialize.purgeStopped(embPairsCache)(_._1)
     // the resolved cell count joins the key: a session that re-resolves
     // K (probe ladder, conf change) must not be served a pair frame
     // built under a different quantizer
     val corpus = Similarity.corpus(spark, dir)
     val k = ivfCellsFor(corpus)
-    embPairsCache.computeIfAbsent((spark, dir, thr, sameCellOnly, k), _ =>
-      embeddingPairs(corpus, thr, sameCellOnly)
-        .transform(graft.state.Materialize.pin(_, Policy.Retained)))
+    graft.state.Materialize.memo(spark, "embedding_pairs",
+        (dir, thr, sameCellOnly, k))(
+      graft.state.Materialize.pin(embeddingPairs(corpus, thr, sameCellOnly), _))
   }
 
   /** The production APPROXIMATE mode of [[dedupEmbedding]]: candidates
@@ -1946,33 +1925,17 @@ object Dedup extends QueryPack {
     * [[SuffixIndex.forDir]] pattern (r11): the spans gate and the
     * excision gate consume the SAME span frame over the same corpus,
     * and deriving it (position explode + gram window + span merge) is
-    * the dominant cost of both. Retained pin so Bench's debris sweep
-    * spares it between the two gates; the from-frame twins below stay
-    * un-memoized for laws/probes.
+    * the dominant cost of both. The memo's retained pin survives
+    * Bench's debris sweep between the two gates (Bench publishes its
+    * cold-build seconds as `span_frame_cold_s`); the from-frame twins
+    * below stay un-memoized for laws/probes.
     */
-  private val spanCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  graft.state.Materialize.registerSessionCache(() => spanCache.clear())
+  private[graft] val SpanMemoName = "span_frame"
 
-  /** Wall seconds of the largest memoized span-frame build this JVM
-    * (−1 until one runs) — emitted into BENCH.json's env block so the
-    * one-time cold cost the medians exclude stays machine-readable
-    * (the `suffix_index_cold_s` accounting convention).
-    */
-  private val spanFrameColdGauge = new graft.state.MaxGauge
-  def spanFrameColdSeconds: Double = spanFrameColdGauge.get
-
-  private def dupSpansForDir(spark: SparkSession, dir: String): DataFrame = {
-    graft.state.Materialize.purgeStopped(spanCache)(_._1)
-    spanCache.computeIfAbsent((spark, dir), _ => {
-      val t0 = System.nanoTime()
-      val sp = graft.state.Materialize.pin(dupSpans(
-        Tables.documents(spark, dir).select(col("doc_id"), col("text"))),
-        Policy.Retained)
-      spanFrameColdGauge.sample((System.nanoTime() - t0) / 1e9)
-      sp
-    })
-  }
+  private def dupSpansForDir(spark: SparkSession, dir: String): DataFrame =
+    graft.state.Materialize.memo(spark, SpanMemoName, dir)(
+      graft.state.Materialize.pin(dupSpans(
+        Tables.documents(spark, dir).select(col("doc_id"), col("text"))), _))
 
   /** The shared span core: per-doc maximal duplicated spans
     * `(doc_id, len, span_id, s, e)` — feeds the per-doc report

@@ -1,11 +1,10 @@
 package graft.ops.llm
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.state.Materialize
 import graft.state.Materialize.Policy
 
 /** The corpus-global suffix index SHARED by `llm_suffix_array_global`
@@ -38,7 +37,7 @@ import graft.state.Materialize.Policy
   * build byproduct — keeping the reference costs nothing new): round k's
   * ranks certify `compareLens(k)`-char equality, which is precisely the
   * probe granularity the longest-dup binary search needs. Memoized per
-  * (session, dir) exactly like `Tables.registerViews`, so whichever of
+  * (session, dir) by [[graft.state.Materialize.memo]], so whichever of
   * the two gates runs first pays the build and the other reuses it.
   *
   * 100 TB posture: identical to round 8's suffix-array analysis —
@@ -80,40 +79,20 @@ object SuffixIndex {
     lazy val finalRanks: DataFrame = denseFinal()
   }
 
-  /** Wall seconds of the LARGEST [[build]] in this JVM (−1 until one
-    * runs). [[graft.Bench]] emits it into BENCH.json's env block so the
-    * one-time cold build the medians exclude (the rep-1-absorbs-setup
-    * contract) is machine-readable in the artifact itself (VERDICT r9
-    * accounting note / #8). Max, not last: the unicode gates build tiny
-    * planted-corpus indexes after the fixture one, and "the figure the
-    * accounting note cares about" is the dominant (corpus) build.
+  /** The [[graft.state.Materialize.memo]] name of the shared index;
+    * Bench publishes its cold-build seconds as `suffix_index_cold_s`.
     */
-  private val lastBuildGauge = new graft.state.MaxGauge
-  def lastBuildSeconds: Double = lastBuildGauge.get
-
-  /** JVM-lifetime count of [[build]] invocations — the memoization
-    * evidence `MemoCacheSpec` asserts on: N concurrent misses on ONE
-    * cache key must increment this exactly once (`computeIfAbsent`
-    * runs the mapping function at most once per key and blocks the
-    * other callers until the single build installs).
-    */
-  private[graft] val buildsStarted =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
-  private val cache = new ConcurrentHashMap[(SparkSession, String), Index]()
-  graft.state.Materialize.registerSessionCache(() => cache.clear())
+  private[graft] val MemoName = "suffix_index"
 
   /** Memoized per (session, fixture dir): the two consuming gates run in
     * the same session over the same dir, and the build is the whole cost.
     */
-  def forDir(spark: SparkSession, dir: String): Index = {
-    graft.state.Materialize.purgeStopped(cache)(_._1)
-    cache.computeIfAbsent((spark, dir),
-      _ => build(Tables.documents(spark, dir), retain = true))
-  }
+  def forDir(spark: SparkSession, dir: String): Index =
+    Materialize.memo(spark, MemoName, dir)(
+      build(Tables.documents(spark, dir), _))
 
-  /** Memoized [[build]] for an in-memory corpus, keyed on (session,
-    * caller-supplied corpus fingerprint) — the [[forDir]] pattern for
+  /** Memoized [[build]] for an in-memory corpus, keyed on a
+    * caller-supplied corpus fingerprint — the [[forDir]] pattern for
     * frames with no backing dir. The two [[UnicodeGates]] gates consume
     * the SAME 10-doc planted corpus and previously each paid a full
     * un-memoized distributed build, ~half of their combined bench cost
@@ -123,11 +102,9 @@ object SuffixIndex {
     * un-memoized [[build]] stays the entry point for laws, fuzz suites
     * and probes, which need fresh per-corpus builds.
     */
-  def forFrame(docs: DataFrame, fingerprint: String): Index = {
-    graft.state.Materialize.purgeStopped(cache)(_._1)
-    cache.computeIfAbsent((docs.sparkSession, s"frame:$fingerprint"),
-      _ => build(docs, retain = true))
-  }
+  def forFrame(docs: DataFrame, fingerprint: String): Index =
+    Materialize.memo(docs.sparkSession, MemoName, s"frame:$fingerprint")(
+      build(docs, _))
 
   /** Distributed two-phase global dense rank of `df` by `sortCols`;
     * `bucket` MUST be a pure function of the sort key's leading
@@ -192,16 +169,13 @@ object SuffixIndex {
     * the algorithm is round 8's `suffixRanksGlobal` with the per-round
     * frames collected instead of discarded.
     */
-  def build(docs: DataFrame, retain: Boolean = false): Index = {
-    val tBuild0 = System.nanoTime()
-    buildsStarted.incrementAndGet()
+  def build(docs: DataFrame, policy: Policy = Policy.Always): Index = {
     import docs.sparkSession.implicits._
     val spark = docs.sparkSession
-    // retained pins survive Bench's between-queries debris sweep —
-    // required exactly when the index outlives the building query
-    // (the forDir cache); from-frame builds stay sweepable
-    val policy = if (retain) Policy.Retained else Policy.Always
-    val pin = graft.state.Materialize.pin(_: DataFrame, policy)
+    // the memo passes Retained: its pins outlive the building query and
+    // must survive Bench's between-queries debris sweep; from-frame
+    // builds stay sweepable
+    val pin = Materialize.pin(_: DataFrame, policy)
     // stage telemetry for tuning runs: DEBUG on graft.ops.llm.SuffixIndex
     val lap = new graft.util.Log.Laps(
       graft.util.Log.logger("ops.llm.SuffixIndex"), "suffix-index")
@@ -335,7 +309,6 @@ object SuffixIndex {
       rankByBucketed(finest.select($"doc_id", $"i", $"r"),
         expr(s"r div $width"), Seq($"r"), pin)._1
     }
-    lastBuildGauge.sample((System.nanoTime() - tBuild0) / 1e9)
     Index(rounds, nSuffixes, maxLen, lens, dense)
   }
 }

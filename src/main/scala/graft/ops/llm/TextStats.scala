@@ -354,20 +354,15 @@ object TextStats extends QueryPack {
     * `llm_winnow` and `llm_winnow_pairs` both derive the same
     * fingerprint frame over the same corpus, and the derivation (one
     * md5 per byte position + per-doc window minima) is the engine's
-    * hottest subtree. Retained pin so Bench's debris sweep spares it
-    * between the two gates.
+    * hottest subtree. The memo's retained pin survives Bench's debris
+    * sweep between the two gates.
     */
-  private val winnowSelCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  graft.state.Materialize.registerSessionCache(() => winnowSelCache.clear())
-
   private def winnowSelForDir(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.state.Materialize.purgeStopped(winnowSelCache)(_._1)
-    winnowSelCache.computeIfAbsent((spark, dir), _ =>
+    graft.state.Materialize.memo(spark, "winnow_selection", dir)(
       graft.state.Materialize.pin(
         winnowMins(Tables.documents(spark, dir))
-          .select($"doc_id", $"wmin").distinct(), Policy.Retained))
+          .select($"doc_id", $"wmin").distinct(), _))
   }
 
   /** The shared winnowing core: per-gram native md5 hashes →

@@ -626,7 +626,7 @@ final class SemDedupProcessor(params: Conf) extends Transform {
   * invocation's internal drop-set pin only once that output's
   * consumption is OBSERVED — so the contract's canonical violation
   * (building two outputs from one instance before consuming either)
-  * now yields correct results for both, with a loud stderr note,
+  * now yields correct results for both, with a WARN log line,
   * instead of missing-block / FileNotFound errors. The residual stays
   * bounded: only the newest unconsumed generation is retained (older
   * ones are released loudly — consuming them after that fails), so a
@@ -669,7 +669,7 @@ final class SemDedupClustersProcessor(params: Conf) extends Transform {
     *     ReliableFaultSpec's bounded-file-count case);
     *   - an UNCONSUMED output keeps its pin, so the in-flight output
     *     stays VALID — the build-two-then-consume-both case now yields
-    *     correct results (with a loud stderr note naming the contract)
+    *     correct results (with a WARN line naming the contract)
     *     instead of a checkpoint crash. Scope of that claim (ADVICE
     *     r16): "consumed" means ANY completed action over the output —
     *     a partial action (e.g. `out.limit(1).count()`) completes the
@@ -729,7 +729,7 @@ final class SemDedupClustersProcessor(params: Conf) extends Transform {
     inFlight = open match {
       case Nil => Nil
       case newest :: older =>
-        System.err.println(
+        SemDedupClustersProcessor.log.warn(
           s"[sem_dedup_clusters] ${open.size} prior output(s) were never " +
           "materialized before this apply() — the SINGLE-IN-FLIGHT-OUTPUT " +
           "contract (consume each output before applying the same " +
@@ -818,6 +818,8 @@ object SemDedupClustersProcessor {
     */
   private val gen = new java.util.concurrent.atomic.AtomicLong(0L)
   private[pipeline] def nextGen(): Long = gen.incrementAndGet()
+
+  private val log = graft.util.Log.logger("pipeline.SemDedupClustersProcessor")
 }
 
 /** C38 ANN annotate-top-k as a pipeline stage: appends to every row its

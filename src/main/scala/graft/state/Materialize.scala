@@ -1,7 +1,11 @@
 package graft.state
 
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Lineage-truncating materialization for iterative / multi-consumer
   * intermediates (winnow fingerprints, connected-components rounds,
@@ -31,26 +35,6 @@ import org.apache.spark.sql.DataFrame
   *     exists for. A real deployment sets `spark.checkpoint.dir` to
   *     shared reliable storage (HDFS / object store) explicitly.
   */
-/** Concurrent running-max gauge (−1 until the first sample) for the
-  * cold-build telemetry Bench publishes (`suffix_index_cold_s`,
-  * `span_frame_cold_s`). The former `@volatile var x = math.max(x, v)`
-  * pattern was a non-atomic read-modify-write: two sessions racing
-  * distinct cache keys could lose the LARGER cold-build time — exactly
-  * the number the field exists to report.
-  */
-final class MaxGauge {
-  private val bits = new java.util.concurrent.atomic.AtomicLong(
-    java.lang.Double.doubleToLongBits(-1.0))
-  @annotation.tailrec
-  final def sample(v: Double): Unit = {
-    val cur = bits.get()
-    if (v > java.lang.Double.longBitsToDouble(cur) &&
-        !bits.compareAndSet(cur, java.lang.Double.doubleToLongBits(v)))
-      sample(v)
-  }
-  def get: Double = java.lang.Double.longBitsToDouble(bits.get())
-}
-
 object Materialize {
 
   val ModeKey = "spark.graft.materialize"
@@ -138,15 +122,15 @@ object Materialize {
     case l: Policy.Loop => materialize(df, l.mode)
   }
 
-  /** RDD ids pinned on behalf of a SESSION-LIVED cache (the memoized
-    * [[graft.ops.llm.SuffixIndex]]): Bench's per-query debris sweep
+  /** RDD ids pinned on behalf of a SESSION-LIVED [[memo]] entry
+    * (e.g. the shared [[graft.ops.llm.SuffixIndex]]): Bench's per-query debris sweep
     * unpersists every persistent RDD between queries, which would
     * destroy a lineage-truncated (localCheckpoint) cached frame — the
     * cache would then hand later queries dataframes whose blocks are
     * gone. The sweep consults this set and leaves retained ids alone.
     */
-  private val retained = new java.util.concurrent.ConcurrentHashMap[
-    Int, org.apache.spark.SparkContext]()
+  private val retained =
+    new ConcurrentHashMap[Int, org.apache.spark.SparkContext]()
 
   /** Ids are attributed to their owning context: RDD ids restart at 0 per
     * SparkContext, so a stale id surviving a context stop would exempt an
@@ -166,7 +150,7 @@ object Materialize {
     * spared: they are lineage-truncated, so unpersisting them would not
     * free-and-recompute but break every later query holding the frame.
     */
-  def sweepDebris(spark: org.apache.spark.sql.SparkSession): Unit = {
+  def sweepDebris(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs
       .filterNot { case (id, _) => isRetained(id) }
@@ -175,64 +159,110 @@ object Materialize {
 
   private val retainLock = new Object
 
-  /** Drop entries of a (SparkSession, …)-keyed session cache whose
-    * session's context has stopped — the cached frames' blocks died with
-    * the context, so handing them out would serve dead blocks, and the
-    * entries otherwise leak for the JVM's lifetime (ADVICE r9). Call
-    * before every cache lookup; CHM iterators support concurrent removal.
+  /** Drop entries of a session-keyed map whose session's context has
+    * stopped — cached frames' blocks died with the context, so handing
+    * them out would serve dead blocks, and the entries otherwise leak
+    * for the JVM's lifetime (ADVICE r9). Call before every lookup; CHM
+    * iterators support concurrent removal.
     */
-  def purgeStopped[K, V](cache: java.util.concurrent.ConcurrentHashMap[K, V])(
-      session: K => org.apache.spark.sql.SparkSession): Unit = {
+  def purgeStopped[K, V](cache: ConcurrentHashMap[K, V])(
+      session: K => SparkSession): Unit = {
     val it = cache.keySet.iterator
     while (it.hasNext) if (session(it.next()).sparkContext.isStopped) it.remove()
   }
 
-  /** Clear callbacks of the session-lived memo caches (SuffixIndex
-    * `forDir`/`forFrame`, Dedup's span/pair caches, TextStats' winnow
-    * cache). Each cache registers once at object init; tests that must
-    * observe a cache MISS — the unknown-mode dispatch error, a real
-    * reliable-vs-local re-derivation — reset the whole memo layer here
-    * instead of reaching into private maps.
+  /** The settings a memoized intermediate's plan and pins depend on: the
+    * pin mode (unset differs from an explicit `local` — see
+    * [[Policy.loop]]), both pin thresholds and the partition count.
+    * Lazy: the threshold keys are defined further down this object.
     */
-  private val sessionCaches =
-    new java.util.concurrent.CopyOnWriteArrayList[() => Unit]()
+  private lazy val RegimeKeys = Seq(ModeKey, AdaptivePinBytesKey,
+    AutoReliableBytesKey, "spark.sql.shuffle.partitions")
 
-  private[graft] def registerSessionCache(clear: () => Unit): Unit =
-    sessionCaches.add(clear)
+  private final case class MemoKey(spark: SparkSession, name: String,
+                                   key: Any, regime: Seq[Option[String]])
 
-  /** Reset every registered memo cache AND un-strand their pins. The
-    * cleared entries' retained RDD ids would otherwise stay exempt from
-    * the debris sweep forever (the sweep skips retained ids BY DESIGN),
-    * so each clear + re-derivation cycle would strictly grow executor
-    * block storage until the context stops. The caches just dropped
-    * their only handles, so the pins are unpersisted and un-retained
-    * here; a frame a caller captured BEFORE the clear is invalidated
-    * (lineage-truncated, blocks gone) — acceptable for this test-only
-    * reset API, and documented so nobody promotes it to a public
-    * surface without revisiting that contract.
+  /** One memo entry; `value` is guarded by the holder's monitor. */
+  private final class MemoSlot { var value: Option[Any] = None }
+
+  private val memos = new ConcurrentHashMap[MemoKey, MemoSlot]()
+
+  /** Live memo entries (stopped sessions' entries go on the next lookup). */
+  private[graft] def memoEntries: Int = memos.size
+
+  /** Cold builds of one memo name: how many ran, and the wall seconds
+    * of the largest (−1 until one runs).
+    */
+  private[graft] final case class ColdBuilds(count: Int, maxSeconds: Double)
+
+  private val cold = new ConcurrentHashMap[String, ColdBuilds]()
+
+  private[graft] def coldBuilds(name: String): ColdBuilds =
+    cold.getOrDefault(name, ColdBuilds(0, -1.0))
+
+  /** A session-lived intermediate shared across gates (the suffix index,
+    * the pair and span frames, the winnow selection, IVF corpus counts),
+    * built once per (session, `name`, `key`, regime): every caller gets
+    * the identical instance, and a frame built under one pin mode,
+    * threshold or partition count is never served under another.
+    * `build` receives [[Policy.Retained]]: the memo outlives the
+    * building query, so the debris sweep must spare its pins.
+    *
+    * The build runs under a per-key holder, outside the map's bin lock:
+    * builds nest (the embedding-pair build resolves its IVF count through
+    * another memo), which `computeIfAbsent` on one map forbids. N
+    * concurrent misses on one key still run exactly one build; a build
+    * that throws caches nothing, so the next call rebuilds. Each cold
+    * build logs one INFO line and lands in [[coldBuilds]].
+    */
+  def memo[V](spark: SparkSession, name: String, key: Any)(
+      build: Policy => V): V = {
+    purgeStopped(memos)(_.spark)
+    val regime = RegimeKeys.map(spark.conf.getOption)
+    val slot = memos.computeIfAbsent(
+      MemoKey(spark, name, key, regime), _ => new MemoSlot)
+    slot.synchronized {
+      if (slot.value.isEmpty) {
+        val t0 = System.nanoTime()
+        slot.value = Some(build(Policy.Retained))
+        val secs = (System.nanoTime() - t0) / 1e9
+        cold.merge(name, ColdBuilds(1, secs), (a, b) =>
+          ColdBuilds(a.count + b.count, math.max(a.maxSeconds, b.maxSeconds)))
+        // a plan key prints as a tree: one line, bounded
+        if (log.isInfoEnabled) log.info(f"[materialize] memo $name built " +
+          f"in $secs%.3fs: key ${key.toString.replaceAll("\\s+", " ").take(160)}; " +
+          "regime " + RegimeKeys.zip(regime).map { case (k, v) =>
+            s"$k=${v.getOrElse("unset")}" }.mkString(", "))
+      }
+      slot.value.get.asInstanceOf[V]
+    }
+  }
+
+  /** Reset the memo layer AND un-strand its pins, for tests that must
+    * observe a MISS (the unknown-mode dispatch error, a real
+    * reliable-vs-local re-derivation). The cleared entries' retained
+    * RDD ids would otherwise stay exempt from the debris sweep forever
+    * (the sweep skips retained ids BY DESIGN), so each clear +
+    * re-derivation cycle would strictly grow executor block storage
+    * until the context stops. The memo just dropped its only handles,
+    * so the pins are unpersisted and un-retained here; a frame a caller
+    * captured BEFORE the clear is invalidated (lineage-truncated, blocks
+    * gone) — acceptable for this test-only reset API, and documented so
+    * nobody promotes it to a public surface without revisiting that
+    * contract.
     */
   private[graft] def clearSessionCaches(): Unit = {
-    // Snapshot the retained ids BEFORE the cache clears, and sweep only
-    // the snapshot: ids a racing Retained pin registers during/after the
-    // clears are never swept, so a computeIfAbsent entry installing
-    // mid-reset keeps live pins (if its entry got cleared instead, the
-    // orphaned pins are collected by the NEXT reset — a one-cycle leak,
-    // not a poison). Deliberately NOT serialized with retainLock: the
-    // cache clears contend on computeIfAbsent bin locks whose mapping
-    // functions take retainLock inside a Retained pin — holding it here
-    // would deadlock. Residual (documented) window: a mapping that
-    // finished its Retained pin before the snapshot but installs its
-    // entry after that cache's clear serves swept blocks — impossible
-    // in this private API's sequential test usage, and the reason it
-    // must not be promoted to a public surface as-is.
-    val snapshot = {
-      val buf = scala.collection.mutable.ArrayBuffer
-        .empty[(Int, org.apache.spark.SparkContext)]
-      val it = retained.entrySet().iterator()
-      while (it.hasNext) { val e = it.next(); buf += ((e.getKey, e.getValue)) }
-      buf
-    }
-    sessionCaches.forEach(_.apply())
+    // Snapshot the retained ids BEFORE the clear, and sweep only the
+    // snapshot: ids a racing Retained pin registers during/after the
+    // clear are never swept, so a build finishing mid-reset keeps live
+    // pins (its orphaned pins are collected by the NEXT reset — a
+    // one-cycle leak, not a poison). Residual (documented) window: a
+    // build that finished its Retained pin before the snapshot but
+    // installs its value after the clear serves swept blocks —
+    // impossible in this private API's sequential test usage, and the
+    // reason it must not be promoted to a public surface as-is.
+    val snapshot = retained.asScala.toList
+    memos.clear()
     snapshot.foreach { case (id, sc) =>
       if (!sc.isStopped)
         sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false))

@@ -1,6 +1,7 @@
 package graft.util
 
-import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.config.Configurator
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The hierarchical-logger twin (…/pyspark_stream/utils/logger.py:5-60):
@@ -35,6 +36,21 @@ class LogSpec extends AnyFunSuite {
     Log.setLevel(Level.WARN)
     try assert(Log.logger("inheriting").getLevel === Level.WARN)
     finally Log.setLevel(Level.ERROR)
+  }
+
+  test("Verify's and Bench's log levels: with the root at WARN and the graft " +
+       "namespace at INFO, graft INFO lines pass and Spark's do not") {
+    val root = LogManager.getRootLogger.getLevel
+    val base = Log.logger.getLevel
+    Configurator.setRootLevel(Level.WARN)
+    Log.setLevel(Level.INFO)
+    try {
+      assert(LogManager.getLogger("graft.state.Materialize").isInfoEnabled)
+      assert(!LogManager.getLogger("org.apache.spark").isInfoEnabled)
+    } finally {
+      Configurator.setRootLevel(root)
+      Log.setLevel(base)
+    }
   }
 
   test("Laps time and format only when DEBUG is enabled at creation") {
