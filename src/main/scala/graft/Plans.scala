@@ -58,6 +58,16 @@ object Plans {
     }
   }
 
+  /** A plan tree with its nondeterministic identifiers replaced by `x`:
+    * expression ids (`name#123`, session-lifetime counters) and plan_id
+    * values churn on every regeneration without any structural change,
+    * drowning the meaningful diffs. An id is glued to what it names
+    * (`name#1`, `count(1)#2L`, `[id=#3]`), so a `#123` after whitespace or
+    * a quote is a plan literal and survives.
+    */
+  private[graft] def normalize(tree: String): String =
+    tree.replaceAll("(?<=[^\\s'\"])#\\d+", "#x").replaceAll("plan_id=\\d+", "plan_id=x")
+
   private def writePlansMd(spark: SparkSession, sfDir: String, out: String): Unit = {
     val sb = new StringBuilder
     sb ++= "# PLANS — physical operator trees for every gated query\n\n"
@@ -83,15 +93,9 @@ object Plans {
       val tree =
         try fn(spark, sfDir).queryExecution.executedPlan.toString
         catch { case e: Throwable => s"<plan failed: ${e.getMessage}>" }
-      // Normalize nondeterministic identifiers (ADVICE r17): expression
-      // ids (#NNNN, session-lifetime counters) and plan_id values churn
-      // on every regeneration without any structural change, drowning
-      // the meaningful diffs. Stripping them AFTER the length trim
-      // would shift the cut column run-to-run, so normalize first.
-      val normalized = tree
-        .replaceAll("#\\d+", "#x")
-        .replaceAll("plan_id=\\d+", "plan_id=x")
-      val trimmed = normalized.linesIterator
+      // normalize BEFORE the length trim: stripping ids after it would
+      // shift the cut column run-to-run
+      val trimmed = normalize(tree).linesIterator
         .map(l => if (l.length > 110) l.take(107) + "..." else l)
         .mkString("\n")
       sb ++= s"\n## $name\n\n```\n$trimmed\n```\n"

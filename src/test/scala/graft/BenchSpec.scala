@@ -60,32 +60,6 @@ class BenchSpec extends AnyFunSuite {
     }
   }
 
-  test("the positional vector decodes through a committed " +
-       "CORRECTNESS_r{N}.json name list when the CURRENT query set has " +
-       "drifted (the file records each round's exact set, so the sig " +
-       "validates the zip even across rounds)") {
-    val full = (1 to 40).map(i => f"q_name_$i%02d" -> (i * 0.11))
-    val line = Bench.compactLine(full, full.map(_._2).sum,
-      "/root/testdata/sf0.1",
-      // force the positional form despite the small set: tiny budget
-      // still above the positional render, below the full object
-      budget = 700)
-    assert(line.contains("\"queries\":["), line)
-    val snapshot = s"""{"parsed":$line}"""
-    val names = full.map(_._1).sorted
-    val drifted = ("zz_new_gate" +: names).sorted
-    val correctness = names.map(n => s""""$n":{"rows_match":true}""")
-      .mkString("{", ",", "}")
-    withDir(Map("CORRECTNESS_r99.json" -> correctness)) { dir =>
-      val (decoded, note) = Bench.snapshotQueries(snapshot, drifted, dir)
-      assert(note.isEmpty, "CORRECTNESS-list decode is full, not degraded")
-      assert(decoded.size === 40)
-      full.foreach { case (k, v) =>
-        assert(decoded(k) === math.round(v * 100) / 100.0, k)
-      }
-    }
-  }
-
   test("snapshotQueries reads the object form; a snapshot without " +
        "decodable queries decodes empty with a degraded-decode note") {
     val obj = """{"parsed":{"queries":{"q_a":1.5,"q_b":0.25}}}"""
@@ -215,5 +189,84 @@ class BenchSpec extends AnyFunSuite {
       """{"parsed":null,"tail":"...\"contended\":true,..."}""") === None)
     assert(Bench.snapshotContended("""{"parsed":null,"tail":"junk"}""") === None)
     assert(Bench.snapshotContended("not json at all") === None)
+  }
+
+  // --- the one regression rule, and `regress` mode ---
+
+  test("verdict: a query that ran before and vanished or failed now is broken") {
+    val v = Bench.verdict(Map("q_gone" -> 2.0, "q_fail" -> 0.7, "q_ok" -> 1.0,
+                              "q_never" -> -1.0),
+                          Map("q_fail" -> -1.0, "q_ok" -> 1.0, "q_never" -> -1.0))
+    assert(v.broken === Seq("q_fail", "q_gone"))
+    assert(v.comparable === 1 && v.failed)
+  }
+
+  test("verdict: exactly 1.5x is regressed, also where a double division " +
+       "reads the tie as 1.4999999999999998") {
+    assert(0.6 / 0.4 < 1.5)
+    val v = Bench.verdict(Map("q_a" -> 0.4, "q_b" -> 2.0, "q_c" -> 2.0),
+                          Map("q_a" -> 0.6, "q_b" -> 3.0, "q_c" -> 2.99))
+    assert(v.regressed.toSet === Set("q_a", "q_b"))
+    assert(v.broken.isEmpty && v.failed)
+  }
+
+  test("verdict: a pair with both times under the 0.5s floor gets no verdict") {
+    val v = Bench.verdict(Map("q_fast" -> 0.1, "q_was_fast" -> 0.49),
+                          Map("q_fast" -> 0.45, "q_was_fast" -> 0.01))
+    assert(v.regressed.isEmpty && v.improved.isEmpty && !v.failed)
+    assert(v.comparable === 2 && v.belowFloor === 2)
+  }
+
+  test("verdict: an improvement is reported and does not fail the guard") {
+    val v = Bench.verdict(Map("q_a" -> 3.0, "q_b" -> 1.0),
+                          Map("q_a" -> 1.0, "q_b" -> 1.1))
+    assert(v.improved === Seq("q_a"))
+    assert(v.regressed.isEmpty && !v.failed)
+  }
+
+  /** `Bench.regress` on two snapshot files in a fresh directory, with its
+    * stdout captured: (exit status, printed report). */
+  private def regressRun(prior: String, current: String): (Int, String) = {
+    val out = new java.io.ByteArrayOutputStream
+    var rc = -1
+    withDir(Map("BENCH_r40.json" -> prior, "BENCH.json" -> current)) { dir =>
+      rc = Console.withOut(new java.io.PrintStream(out, true, "UTF-8"))(
+        Bench.regress(dir.resolve("BENCH_r40.json"), dir.resolve("BENCH.json")))
+      assert(!java.nio.file.Files.exists(dir.resolve("BENCH_REGRESS.md")))
+    }
+    (rc, out.toString("UTF-8"))
+  }
+
+  test("regress mode: exit 1 on a broken or regressed query, 0 on a clean " +
+       "pair, and no BENCH_REGRESS.md written") {
+    val report = java.nio.file.Paths.get("BENCH_REGRESS.md")
+    def stamp = if (java.nio.file.Files.exists(report))
+      Some(java.nio.file.Files.getLastModifiedTime(report)) else None
+    val before = stamp
+    def run(qs: String) = s"""{"queries":{$qs}}"""
+    val prior = """{"parsed":{"env":{"contended":false},""" +
+      """"queries":{"q_a":1.0,"q_b":2.0}}}"""
+    val (broken, brokenOut) = regressRun(prior, run(""""q_a":1.0"""))
+    assert(broken === 1)
+    assert(brokenOut.contains("Broken (ran before, failed or missing now): q_b"))
+    assert(brokenOut.contains(
+      "[bench-regress] vs BENCH_r40.json (r40): 1 comparable, 1 broken"), brokenOut)
+    val (slow, slowOut) = regressRun(prior, run(""""q_a":1.5,"q_b":2.0"""))
+    assert(slow === 1)
+    assert(slowOut.contains("| q_a | 1.00 | 1.50 | 1.50x |"), slowOut)
+    val (clean, cleanOut) = regressRun(prior, run(""""q_a":0.5,"q_b":2.1"""))
+    assert(clean === 0)
+    assert(cleanOut.contains("| q_a | 1.00 | 0.50 | 0.50x |"), cleanOut)
+    assert(!cleanOut.contains("CONTENDED"), "the prior certifies clean")
+    assert(stamp === before, "regress mode must not write BENCH_REGRESS.md")
+  }
+
+  test("main rejects any argument list but none or `regress <a> <b>`, " +
+       "before it builds a session") {
+    Seq(Array("anything"), Array("regress", "BENCH.json"),
+        Array("regress", "a.json", "b.json", "c.json")).foreach { args =>
+      val e = intercept[IllegalArgumentException](Bench.main(args))
+      assert(e.getMessage.startsWith("usage: graft.Bench"), args.mkString(" "))
+    }
   }
 }

@@ -14,11 +14,6 @@ class MaterializeSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
-  private def withMode[A](mode: String)(f: => A): A = {
-    spark.conf.set(Materialize.ModeKey, mode)
-    try f finally spark.conf.set(Materialize.ModeKey, "local")
-  }
-
   private def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
@@ -35,7 +30,7 @@ class MaterializeSpec extends SparkSpec {
       Materialize.clearSessionCaches()
       val local    = canon(qs(name)(spark, dir))
       Materialize.clearSessionCaches()
-      val reliable = withMode("reliable")(canon(qs(name)(spark, dir)))
+      val reliable = withConf(Materialize.ModeKey -> "reliable")(canon(qs(name)(spark, dir)))
       assert(local.nonEmpty, s"$name: empty result")
       assert(reliable == local, s"$name: reliable mode drifts from local")
     }
@@ -73,7 +68,7 @@ class MaterializeSpec extends SparkSpec {
        "(ContextCleaner does not; a per-micro-batch caller " +
        "would grow shared storage without bound)") {
     import spark.implicits._
-    withMode("reliable") {
+    withConf(Materialize.ModeKey -> "reliable") {
       val scoped = Materialize.pin(spark.range(100).select($"id"), Policy.Always)
       assert(scoped.count() === 100L)
       val ckptDir = spark.sparkContext.getCheckpointDir.get
@@ -92,11 +87,24 @@ class MaterializeSpec extends SparkSpec {
     }
   }
 
+  test("withConf puts an unset spark.graft.materialize back to unset, not " +
+       "to an explicit local (which vetoes the loop-pin autopilot and " +
+       "changes the memo key for every suite after it)") {
+    val prior = spark.conf.getOption(Materialize.ModeKey)
+    spark.conf.unset(Materialize.ModeKey)
+    try {
+      withConf(Materialize.ModeKey -> "reliable") {
+        assert(spark.conf.get(Materialize.ModeKey) === "reliable")
+      }
+      assert(spark.conf.getOption(Materialize.ModeKey) === None)
+    } finally prior.foreach(spark.conf.set(Materialize.ModeKey, _))
+  }
+
   test("unknown materialize mode fails fast") {
     // a memo-cache hit would serve the already-pinned frame and never
     // reach the mode dispatch — force the MISS
     Materialize.clearSessionCaches()
-    val e = withMode("spill-to-floppy") {
+    val e = withConf(Materialize.ModeKey -> "spill-to-floppy") {
       intercept[IllegalArgumentException](
         SparkEntry.queries("llm_winnow_pairs")(spark, dir).collect())
     }
@@ -113,10 +121,8 @@ class MaterializeSpec extends SparkSpec {
     def isPinned(out: org.apache.spark.sql.DataFrame): Boolean =
       out.queryExecution.optimizedPlan.toString.contains("LogicalRDD") ||
         out.queryExecution.analyzed.toString.contains("LogicalRDD")
-    def withThr[A](v: String)(f: => A): A = {
-      spark.conf.set(Materialize.AdaptivePinBytesKey, v)
-      try f finally spark.conf.unset(Materialize.AdaptivePinBytesKey)
-    }
+    def withThr[A](v: String)(f: => A): A =
+      withConf(Materialize.AdaptivePinBytesKey -> v)(f)
     // far-above threshold: the tiny frame is returned UNPINNED
     val skipped = withThr((1L << 40).toString)(Materialize.pin(df, Policy.IfLarge))
     assert(!isPinned(skipped), "sub-threshold tower must skip the pin")

@@ -11,15 +11,6 @@ class RulesSpec extends SparkSpec {
 
   import spark.implicits._
 
-  private def withConf[T](kvs: (String, String)*)(body: => T): T = {
-    val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally saved.foreach { case (k, v) =>
-      v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
-    }
-  }
-
   private def optimized(df: org.apache.spark.sql.DataFrame): String = {
     ApproxDistinctRewrite.register(spark)
     df.queryExecution.optimizedPlan.toString

@@ -17,6 +17,16 @@ class PlanSpec extends SparkSpec {
     graft.SparkEntry.queries(name)(spark, dir)
       .queryExecution.executedPlan.toString
 
+  test("Plans.normalize replaces expression ids and plan_id values but " +
+       "leaves a #123 literal alone") {
+    import graft.Plans.normalize
+    assert(normalize("Project [name#123, count(1)#45L] [id=#7]") ===
+      "Project [name#x, count(1)#xL] [id=#x]")
+    assert(normalize("Filter (tag = #123)") === "Filter (tag = #123)")
+    assert(normalize("Filter contains(tag, '#123')") === "Filter contains(tag, '#123')")
+    assert(normalize("LocalTableScan plan_id=7") === "LocalTableScan plan_id=x")
+  }
+
   test("filter_pushdown: predicates reach the parquet scan") {
     val p = plan("filter_pushdown")
     assert(p.contains("PushedFilters: ["), p)

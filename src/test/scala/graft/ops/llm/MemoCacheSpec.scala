@@ -45,16 +45,6 @@ class MemoCacheSpec extends SparkSpec {
         s"payload ABCDEFGH-$tag plus unique tail ${i * 7919}"))
       .toDF("doc_id", "text")
 
-  /** Run `f` with `key` set to `value`, restoring the prior setting. */
-  private def withConf[A](key: String, value: String)(f: => A): A = {
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try f finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("8 concurrent forFrame misses on one fingerprint run exactly one " +
        "build and all callers share the identical Index instance") {
     val docs = corpus("memo-a", 12)
@@ -103,7 +93,7 @@ class MemoCacheSpec extends SparkSpec {
       val fp = s"memo-spec-regime-$key-$runTag"
       val first = SuffixIndex.forFrame(docs, fp)
       val before = builds()
-      val switched = withConf(key, value)(SuffixIndex.forFrame(docs, fp))
+      val switched = withConf(key -> value)(SuffixIndex.forFrame(docs, fp))
       assert(builds() - before === 1, s"$key=$value must rebuild")
       assert(!(switched eq first),
         s"$key=$value must not serve the other regime's Index")
