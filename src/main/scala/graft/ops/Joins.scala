@@ -408,17 +408,23 @@ object Joins extends QueryPack {
     * the shape: Generate + hash/sort-merge join, no nested-loop). The
     * manual twin of this rewrite is [[thetaRange]]; this gate proves a
     * user can write the declarative form and still get the scale-safe
-    * plan. The width conf stays set for the session: the rule's scope
-    * guard makes it a no-op for every other gated query (each either
-    * has an equi key or no cross-side inequality pair).
+    * plan. The frame is built on a child session carrying the caller's
+    * runtime conf plus the width and the rule, so the caller's session
+    * is left as it was.
     */
   def rangeAutoJoin(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    graft.functions.RangeJoinBandRewrite.register(spark)
-    spark.conf.set(graft.functions.RangeJoinBandRewrite.WidthKey, "16")
-    Tables.lineitem(spark, dir)
+    val banded = spark.newSession()
+    // newSession() starts from the SparkConf: carry the caller's runtime
+    // settings (partitions, AQE, graft knobs) over
+    spark.conf.getAll.foreach { case (k, v) =>
+      if (!banded.conf.getOption(k).contains(v)) banded.conf.set(k, v)
+    }
+    graft.functions.RangeJoinBandRewrite.register(banded)
+    banded.conf.set(graft.functions.RangeJoinBandRewrite.WidthKey, "16")
+    import banded.implicits._
+    Tables.lineitem(banded, dir)
       .select($"l_extendedprice".as("price"))
-      .join(Tables.part(spark, dir)
+      .join(Tables.part(banded, dir)
               .select($"p_brand", $"p_retailprice"),
             $"price" >= $"p_retailprice" - 5.0 &&
               $"price" <= $"p_retailprice" + 5.0)

@@ -525,29 +525,10 @@ object Curation extends QueryPack {
   /** [[curationFunnel]] over any (doc_id, lang, text, n_chars) corpus —
     * also the `ScaleProbe` entry.
     */
-  /** The funnel's quality-scoring stage alone (adds ws/n_tokens/score/
-    * qual): map-side only, so the STREAMING ingest path
-    * ([[graft.streaming.CurationStream]]) can run the identical features
-    * per micro-batch without duplicating the definition.
-    */
-  private[graft] def scoreDocs(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    docs
-      .withColumn("ws", split($"text", " "))
-      .withColumn("n_tokens", size($"ws").cast("long"))
-      .withColumn("score",
-        ($"n_chars".between(100, 400)).cast("int")
-          + ($"n_tokens" >= 20).cast("int")
-          + (size(array_distinct($"ws")).cast("long") * 2 >= $"n_tokens")
-              .cast("int")
-          + (expr("cast(size(filter(ws, w -> w = 'the' or w = 'a')) as bigint)")
-               * 5 <= $"n_tokens").cast("int"))
-      .withColumn("qual", $"score" >= 3)
-  }
-
   private[graft] def curationFunnelFrom(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
-    val scored = scoreDocs(docs)
+    val scored = TextStats.withQualityScore(docs, $"text", $"n_chars")
+      .withColumn("qual", $"score" >= 3)
     // one window keyed on the content hash: the group's first QUALITY
     // doc (qual sorts first, then lowest id) is the canonical survivor
     val wDup = Window.partitionBy(md5($"text"))
@@ -618,7 +599,7 @@ object Curation extends QueryPack {
   /** The END-TO-END curation pipeline as ONE gated query — the
     * composition a real ingest runs, not four separate operators:
     * NFC-normalize ([[graft.functions.NfcNormalize]]) → quality filter
-    * ([[scoreDocs]], the funnel's exact features) → first-quality-wins
+    * ([[TextStats.withQualityScore]], score >= 3) → first-quality-wins
     * exact dedup (content-hash window) → CDC-chunk the survivors
     * ([[Dedup.cdcChunkRowsBatch]]) and census residual sub-document
     * duplication per lang. Every stage is verified on its own gate; this
@@ -643,8 +624,8 @@ object Curation extends QueryPack {
     // after, both steal-clean). The pins drop the ws/score
     // scratch columns first so the
     // materialized bytes are (id, lang, text, qual), not the token arrays.
-    val scored = scoreDocs(docs)
-      .select($"doc_id", $"lang", $"text", $"qual")
+    val scored = TextStats.withQualityScore(docs, $"text", $"n_chars")
+      .select($"doc_id", $"lang", $"text", ($"score" >= 3).as("qual"))
       .transform(graft.state.Materialize.pin(_, Policy.Always))
     val wDup = Window.partitionBy(md5($"text")).orderBy($"qual".desc, $"doc_id")
     val canon = scored.withColumn("rn", row_number().over(wDup))

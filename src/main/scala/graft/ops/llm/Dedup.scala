@@ -183,18 +183,14 @@ object Dedup extends QueryPack {
     // sized from the actual index cardinality (an under-sized filter
     // saturates toward fpp≈1 and the prescreen degrades to the plain
     // anti-join PLUS a wasted index aggregate — correctness unaffected,
-    // economics gone). A deployment that tracks its index size sets
-    // `spark.graft.dedup.bloomExpectedItems` to skip the count pass.
-    // The membership probe is the native codegen'd
+    // economics gone). The membership probe is the native codegen'd
     // `graft_bloom_might_contain` expression (functions/BloomMightContain
     // .scala) over the filter's serialized bytes — no ScalaUDF, no
     // closure serialization — and runs on the already-aggregated batch
     // keys (batch-sized, never corpus-sized).
     graft.functions.GraftFunctions.register(spark)
-    val expectedItems = spark.conf
-      .getOption("spark.graft.dedup.bloomExpectedItems").map(_.toLong)
-      .getOrElse(math.max(index.count(), 1L))
-    val bf = index.stat.bloomFilter("content_hash", expectedItems, 0.03)
+    val bf = index.stat.bloomFilter("content_hash",
+      math.max(index.count(), 1L), 0.03)
     val bfBytes = {
       val baos = new java.io.ByteArrayOutputStream()
       bf.writeTo(baos)
@@ -2119,7 +2115,7 @@ object Dedup extends QueryPack {
     * `filter` over the position sequence, cut points and chunk slices via
     * `transform` — one codegen'd expression, NO shuffle and NO per-doc
     * aggregation. That shape is what makes the chunker legal in a
-    * streaming select ([[graft.streaming.ChunkDedupStream]]): streaming
+    * streaming select (the `cdc_chunks` pipeline processor): streaming
     * forbids the window/groupBy the batch form uses. For BATCH the
     * explode pipeline ([[cdcChunkRowsBatch]]) is ~25% faster (the
     * higher-order form allocates a len-sized position array per row;

@@ -67,8 +67,8 @@ final class NfcNormalizeProcessor(spark: org.apache.spark.sql.SparkSession,
   * rows via the pure-projection chunker — the pipeline form of
   * [[graft.ops.llm.Dedup.cdcChunkRows]]; follow with
   * `dedup_exact(columns=[h])` for chunk-level dedup, in batch or
-  * streaming (the [[graft.streaming.ChunkDedupStream]] architecture,
-  * config-driven).
+  * streaming (a streaming `dropDuplicates` on `h` keeps one state row per
+  * distinct chunk in the checkpoint, so dedup holds across restarts).
   *
   * Declared output schema (the pipeline-boundary contract — ADVICE r10:
   * the r10 byte-semantics change had widened it silently):

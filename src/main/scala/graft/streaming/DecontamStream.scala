@@ -14,16 +14,19 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * and joins each micro-batch via the exact
   * [[graft.ops.llm.TextStats.contaminationRatioFrom]] definition the
   * batch gate hash-matches against DuckDB — one definition, two
-  * execution modes, the [[CurationStream]] pattern. Clean documents
-  * append to the corpus path; flagged documents land on a reject path
-  * with their ppm so the leak is auditable, never silently dropped.
+  * execution modes. Clean documents append to the corpus path; flagged
+  * documents land on a reject path with their ppm so the leak is
+  * auditable, never silently dropped.
   *
   * Scale posture: the filter is STATELESS — no watermark, no state
   * store, nothing grows with stream history; each batch shuffles only
   * itself (per-doc gram aggregate) and the benchmark set rides along as
   * one broadcast. Batch writes are keyed by batch_id with overwrite, so
   * a replayed batch lands on its own path — exactly-once by idempotence
-  * (the [[CurationStream]] sink contract).
+  * (the `foreach_batch` pipeline sink's contract).
+  *
+  * It stays a hand-written query, not a YAML pipeline, because it writes
+  * TWO outputs per batch (accepted and rejected); no pipeline sink does.
   */
 object DecontamStream {
 
@@ -46,7 +49,7 @@ object DecontamStream {
              outDir: String, rejectDir: String,
              checkpointDir: String): StreamingQuery = {
     graft.io.LocalFs.install(spark)
-    val docs = spark.readStream.schema(CurationStream.docSchema)
+    val docs = spark.readStream.schema(graft.schema.SchemaRegistry.Documents)
       .parquet(srcDir)
     docs.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>

@@ -94,19 +94,25 @@ object StreamOps {
     ds.groupByKey(_.key)
       .flatMapGroupsWithState[Keyed, Keyed](
         OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[Keyed], state: GroupState[Keyed]) =>
-          val incoming = rows.toSeq
-          if (incoming.isEmpty) Iterator.empty
-          else {
-            val best = incoming.maxBy(_.off)
-            val prior = state.getOption
-            if (prior.forall(_.off < best.off)) {
-              state.update(best)
-              Iterator.single(best)
-            } else Iterator.empty
-          }
+        (_: String, rows: Iterator[Keyed], state: GroupState[Keyed]) =>
+          latestStep(rows, state.getOption, state.update)
       }
   }
+
+  /** One latest-per-key step, shared by all three operators: the batch's
+    * highest-offset row is emitted and stored only when it is newer than
+    * the key's `prior` state.
+    */
+  private def latestStep(rows: Iterator[Keyed], prior: Option[Keyed],
+                         store: Keyed => Unit): Iterator[Keyed] =
+    if (!rows.hasNext) Iterator.empty
+    else {
+      val best = rows.maxBy(_.off)
+      if (prior.forall(_.off < best.off)) {
+        store(best)
+        Iterator.single(best)
+      } else Iterator.empty
+    }
 
   /** The [[latestPerKeyStateful]] semantics on Spark 4's
     * `transformWithState` — the arbitrary-state API that supersedes
@@ -121,18 +127,8 @@ object StreamOps {
       latest = getHandle.getValueState[Keyed](
         "latest", Encoders.product[Keyed], TTLConfig.NONE)
     override def handleInputRows(key: String, rows: Iterator[Keyed],
-                                 timerValues: TimerValues): Iterator[Keyed] = {
-      val incoming = rows.toSeq
-      if (incoming.isEmpty) Iterator.empty
-      else {
-        val best = incoming.maxBy(_.off)
-        val prior = if (latest.exists()) Some(latest.get()) else None
-        if (prior.forall(_.off < best.off)) {
-          latest.update(best)
-          Iterator.single(best)
-        } else Iterator.empty
-      }
-    }
+                                 timerValues: TimerValues): Iterator[Keyed] =
+      latestStep(rows, Option.when(latest.exists())(latest.get()), latest.update)
   }
 
   /** C30 (Spark-4-native form): the same latest-per-key changelog via
@@ -162,18 +158,8 @@ object StreamOps {
                                     timerValues: TimerValues): Unit =
       latest.update(initialState)
     override def handleInputRows(key: String, rows: Iterator[Keyed],
-                                 timerValues: TimerValues): Iterator[Keyed] = {
-      val incoming = rows.toSeq
-      if (incoming.isEmpty) Iterator.empty
-      else {
-        val best = incoming.maxBy(_.off)
-        val prior = if (latest.exists()) Some(latest.get()) else None
-        if (prior.forall(_.off < best.off)) {
-          latest.update(best)
-          Iterator.single(best)
-        } else Iterator.empty
-      }
-    }
+                                 timerValues: TimerValues): Iterator[Keyed] =
+      latestStep(rows, Option.when(latest.exists())(latest.get()), latest.update)
   }
 
   /** [[latestPerKeyTws]] seeded from a batch snapshot (the kappa

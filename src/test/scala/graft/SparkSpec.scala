@@ -27,6 +27,11 @@ abstract class SparkSpec extends AnyFunSuite {
       v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
     }
   }
+  /** The RocksDB state store provider (`transformWithState` requires
+    * it), as a [[withConf]] pair. */
+  val RocksDb: (String, String) =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 }

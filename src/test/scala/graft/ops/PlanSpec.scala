@@ -579,6 +579,14 @@ class PlanSpec extends SparkSpec {
            p.contains("BroadcastHashJoin"), p)
   }
 
+  test("join_range_auto leaves the caller's session conf as it found it " +
+       "(no band width leaks into later plans)") {
+    val key = graft.functions.RangeJoinBandRewrite.WidthKey
+    assert(spark.conf.getOption(key).isEmpty)
+    assert(plan("join_range_auto").contains("Generate"))
+    assert(spark.conf.getOption(key).isEmpty)
+  }
+
   test("llm_curation_funnel: the three-stage funnel composes into ONE " +
        "corpus pass — a single scan, one content-hash window, no join") {
     val p = plan("llm_curation_funnel")

@@ -681,7 +681,7 @@ object ScaleProbe {
     // one row per DISTINCT chunk hash, so re-crawled content (10× the
     // batches, 10× the doc keys, same text population) must leave state
     // rows EXACTLY flat while per-batch wall stays level. Drives the
-    // real ChunkDedupStream transform (CDC chunker + dropDuplicates on
+    // chunk-dedup processors (cdc_chunks → select_expr → dedup_exact on
     // the hash) through MemoryStream micro-batches against the noop
     // sink, reading state rows/bytes from the progress telemetry. The
     // driver-side doc collect is the bounded fixture corpus (~1.4 MB) —
@@ -690,8 +690,15 @@ object ScaleProbe {
       implicit val ctx = spark.sqlContext
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val in = MemoryStream[(Long, String)]
-      val q = graft.streaming.ChunkDedupStream
-        .newChunks(in.toDF().toDF("doc_id", "text"))
+      import graft.config.Conf
+      import graft.pipeline.{Pipeline, ProcessorRegistry}
+      val chain = Seq(
+        "cdc_chunks" -> Conf.empty,
+        "select_expr" -> Conf(Map("exprs" ->
+          List("doc_id", "j", "h", "cast(nb as bigint) as n_chars"))),
+        "dedup_exact" -> Conf(Map("columns" -> List("h"))))
+        .map { case (cls, params) => ProcessorRegistry.resolve(spark, cls, params) }
+      val q = Pipeline.applyProcessors(in.toDF().toDF("doc_id", "text"), chain).get
         .writeStream.format("noop").outputMode("append").start()
       try {
         val all = docs.as[(Long, String)].collect()

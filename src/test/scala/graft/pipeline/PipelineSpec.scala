@@ -2,6 +2,8 @@ package graft.pipeline
 
 import graft.SparkSpec
 import graft.config.Conf
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** End-to-end pipeline wiring: YAML → build → run against real file
   * sources/sinks (the offline twins of the reference's Kafka→Kafka path —
@@ -495,5 +497,26 @@ class PipelineSpec extends SparkSpec {
     assert(rows.toSeq === Seq(("key1", "HELLO WORLD"), ("key2", "TEST MESSAGE"),
                               ("key3", "PYSPARK STREAM")))
     assert(spark.streams.active.isEmpty) // stop() stopped everything (A15)
+  }
+
+  test("no readStream or writeStream in src/main outside the connectors " +
+       "and DecontamStream") {
+    // every other streaming job is a YAML pipeline; comment lines are
+    // skipped (KafkaOptions' scaladoc names the reader it configures)
+    val streamCall = "\\.(readStream|writeStream)\\b".r
+    def calls(p: java.nio.file.Path) = Files.readAllLines(p).asScala.exists { l =>
+      val t = l.trim
+      !t.startsWith("*") && !t.startsWith("/") && streamCall.findFirstIn(l).nonEmpty
+    }
+    val allowed = Set("connect/Connectors.scala", "streaming/DecontamStream.scala")
+      .map(f => Paths.get("src/main/scala/graft", f))
+    assert(allowed.forall(calls))
+    val files = Files.walk(Paths.get("src/main/scala"))
+    val offenders =
+      try files.iterator().asScala
+        .filter(p => p.toString.endsWith(".scala") && !allowed(p) && calls(p))
+        .map(_.toString).toList
+      finally files.close()
+    assert(offenders.isEmpty)
   }
 }

@@ -1,13 +1,14 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.pipeline.Pipeline
 import org.apache.spark.sql.functions._
 
-/** End-to-end streaming curation: the funnel's quality features + exact
-  * dedup running incrementally over arriving file batches, with the
-  * dedup index living in checkpointed state. Pins the three claims the
-  * batch gates cannot: (1) the streaming output equals the batch
-  * quality-filter + distinct-hash result over everything that has
+/** End-to-end streaming curation as a YAML pipeline: the funnel's quality
+  * score + exact dedup running incrementally over arriving file batches,
+  * with the dedup index living in checkpointed state. Pins the three
+  * claims the batch gates cannot: (1) the streaming output equals the
+  * batch quality-filter + distinct-hash result over everything that has
   * arrived, (2) dedup state SURVIVES a restart — batch-2 documents whose
   * content arrived in batch 1 are rejected by the restored checkpoint,
   * (3) a restart with no new input emits nothing (no replay
@@ -15,51 +16,73 @@ import org.apache.spark.sql.functions._
   */
 class CurationStreamSpec extends SparkSpec {
 
+  /** Score (`score >= 3` passes) → first-arrival-wins dedup on
+    * md5(text) → the compact accepted row; each micro-batch lands in
+    * `out/batch_id=N`. */
+  private def curationYaml(src: String, out: String, ckpt: String): String =
+    s"""source:
+       |  type: parquet
+       |  config: {path: "$src", schema: DOCUMENTS_SCHEMA}
+       |processors:
+       |  - {name: Score, class: quality_score, params: {min_score: 3}}
+       |  - {name: Dedup, class: dedup_exact}
+       |  - {name: Project, class: select_expr,
+       |     params: {exprs: [doc_id, lang, source, n_chars, content_hash]}}
+       |sink:
+       |  type: foreach_batch
+       |  config: {path: "$out", checkpoint_location: "$ckpt"}
+       |""".stripMargin
+
   test("streaming curation dedups across restarts from checkpointed state") {
     import spark.implicits._
     val fixtures = graft.Tables.documents(spark, "/root/testdata/sf0.01")
     val src = tmpDir("curate-src"); val out = tmpDir("curate-out")
     val ckpt = tmpDir("curate-ckpt")
+    // each run is a restart: a fresh build over the same checkpoint
+    def ingest(): Unit = {
+      val p = Pipeline.fromYamlString(spark, curationYaml(src, out, ckpt),
+        streaming = true).build()
+      val q = p.run(awaitTermination = false).get
+      q.processAllAvailable()
+      q.stop()
+    }
+    def quality(df: org.apache.spark.sql.DataFrame) =
+      graft.ops.llm.TextStats.withQualityScore(df, $"text", $"n_chars")
+        .where($"score" >= 3)
 
     // batch 1: docs 0-249. batch 2: docs 200-499 re-keyed to fresh ids —
     // 50 of them carry content already accepted in batch 1, so only the
     // checkpointed hash state can reject them.
     fixtures.where($"doc_id" < 250)
       .write.mode("append").parquet(src)
-    val q1 = CurationStream.ingest(spark, src, out, ckpt)
-    q1.awaitTermination()
+    ingest()
 
     def accepted() = spark.read.parquet(out)
     val afterB1 = accepted().count()
-    val expectB1 = graft.ops.llm.Curation.scoreDocs(
-        fixtures.where($"doc_id" < 250))
-      .where($"qual").select(md5($"text")).distinct().count()
+    val expectB1 = quality(fixtures.where($"doc_id" < 250))
+      .select(md5($"text")).distinct().count()
     assert(afterB1 === expectB1)
 
     fixtures.where($"doc_id" >= 200)
       .withColumn("doc_id", $"doc_id" + 10000)
       .write.mode("append").parquet(src)
-    val q2 = CurationStream.ingest(spark, src, out, ckpt)
-    q2.awaitTermination()
+    ingest()
 
     // all-time invariant: one accepted row per distinct quality hash
     // over everything that has arrived, batch boundaries invisible
     val union = fixtures.where($"doc_id" < 250)
       .unionByName(fixtures.where($"doc_id" >= 200))
-    val expectAll = graft.ops.llm.Curation.scoreDocs(union)
-      .where($"qual").select(md5($"text")).distinct().count()
+    val expectAll = quality(union).select(md5($"text")).distinct().count()
     assert(accepted().count() === expectAll)
     assert(accepted().select($"content_hash").distinct().count() === expectAll)
     // the batch-1/batch-2 content overlap really exercised the state:
     // batch 2 contributed fewer rows than its own distinct-quality count
-    val b2Alone = graft.ops.llm.Curation.scoreDocs(
-        fixtures.where($"doc_id" >= 200))
-      .where($"qual").select(md5($"text")).distinct().count()
+    val b2Alone = quality(fixtures.where($"doc_id" >= 200))
+      .select(md5($"text")).distinct().count()
     assert(expectAll - afterB1 < b2Alone)
 
     // restart with nothing new: no rows added anywhere
-    val q3 = CurationStream.ingest(spark, src, out, ckpt)
-    q3.awaitTermination()
+    ingest()
     assert(accepted().count() === expectAll)
   }
 }

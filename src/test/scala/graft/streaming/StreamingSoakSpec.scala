@@ -18,10 +18,7 @@ class StreamingSoakSpec extends SparkSpec {
 
   test("220-micro-batch RocksDB soak: dedup state plateaus at the " +
        "watermark horizon while total keys grow without bound") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(RocksDb) {
       implicit val ctx = spark.sqlContext
       val in = MemoryStream[(Timestamp, String)]
       // 10-minute watermark; event time advances one minute per batch →
@@ -66,11 +63,6 @@ class StreamingSoakSpec extends SparkSpec {
       //    (10-min horizon ≈ 10–12 batches × 5 keys)
       assert(plateau >= 10 * perBatch,
         s"plateau $plateau suspiciously small — watermark semantics changed?")
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 }

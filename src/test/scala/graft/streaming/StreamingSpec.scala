@@ -177,10 +177,7 @@ class StreamingSpec extends SparkSpec {
   test("C30 transformWithState (Spark 4 arbitrary-state API) maintains the " +
        "same latest-per-key changelog on RocksDB") {
     // transformWithState requires the RocksDB state store provider
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(RocksDb) {
       implicit val ctx = spark.sqlContext
       val in = MemoryStream[Keyed]
       val q = StreamOps.latestPerKeyTws(in.toDS())
@@ -197,20 +194,12 @@ class StreamingSpec extends SparkSpec {
         assert(emissions.toSet === Set(Keyed("a", 2, "y"), Keyed("b", 1, "z"),
                                        Keyed("b", 5, "z2")))
       }
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
   test("C30 initial-state bootstrap: a batch snapshot seeds " +
        "transformWithState state before the first micro-batch") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(RocksDb) {
       implicit val ctx = spark.sqlContext
       // warehouse truth: key a already saw offset 5
       val snapshot = Seq(Keyed("a", 5, "warehouse")).toDS()
@@ -230,20 +219,12 @@ class StreamingSpec extends SparkSpec {
         assert(emissions.toSet === Set(Keyed("b", 1, "fresh"),
                                        Keyed("a", 9, "newer")))
       }
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
   test("C30 event-time timers close idle sessions via transformWithState " +
        "(watermark-driven, deterministic)") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(RocksDb) {
       implicit val ctx = spark.sqlContext
       val in = MemoryStream[StreamOps.Stamped]
       val q = StreamOps.sessionizeWithTimers(in.toDS(), "1 second", gapMs = 60000L)
@@ -270,20 +251,12 @@ class StreamingSpec extends SparkSpec {
         assert(spark.table("timer_sink").as[StreamOps.SessionOut].collect()
           .count(_.key == "a") === 1)
       }
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
   test("C30 MapState keeps per-key sub-keyed counters (one map per user, " +
        "one counter per event kind)") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(RocksDb) {
       implicit val ctx = spark.sqlContext
       val in = MemoryStream[StreamOps.TypedEvent]
       val q = StreamOps.kindCounts(in.toDS())
@@ -303,19 +276,11 @@ class StreamingSpec extends SparkSpec {
         assert(last === Map(
           ("u1", "view") -> 3L, ("u1", "click") -> 1L, ("u2", "view") -> 1L))
       }
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
   test("C30 ListState keeps a bounded last-N window per key across batches") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(RocksDb) {
       implicit val ctx = spark.sqlContext
       val in = MemoryStream[StreamOps.TypedEvent]
       val q = StreamOps.recentEvents(in.toDS(), maxN = 3)
@@ -331,11 +296,6 @@ class StreamingSpec extends SparkSpec {
         assert(emissions.contains("a,b"))   // first batch: under the cap
         assert(emissions.contains("b,c,d"), // second: trimmed to last 3
           s"expected the trimmed last-3 window, got $emissions")
-      }
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
       }
     }
   }
@@ -648,10 +608,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("RocksDB state store provider runs the same stateful plan (the 100TB state backend)") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(RocksDb) {
       implicit val ctx = spark.sqlContext
       val in = MemoryStream[(Timestamp, String)]
       val agg = StreamOps.tumbling(in.toDF().toDF("ts", "k"),
@@ -668,11 +625,6 @@ class StreamingSpec extends SparkSpec {
         val rows = spark.table("rocksdb_sink")
           .select($"k", $"n").as[(String, Long)].collect().toSet
         assert(rows.contains(("a", 2L)))
-      }
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
       }
     }
   }
