@@ -9,25 +9,91 @@ import scala.jdk.CollectionConverters._
   * field-by-field with ValueError (…/config/config_loader.py:4-26 and the
   * per-field checks in …/connectors/kafka_connector.py:46-49, 163-166,
   * 204-214).
+  *
+  * Every getter reads through [[opt]], which records the key whether or
+  * not it is present; [[graft.pipeline.ProcessorRegistry.resolve]]
+  * rejects any supplied key no getter read, so a processor's accepted
+  * keys are exactly the ones its constructor asks for. A YAML scalar and
+  * a quoted string parse alike (both arrive as their string form). Each
+  * typed getter fails with an `IllegalArgumentException` naming the key
+  * and the bad value.
   */
 final case class Conf(m: Map[String, Any]) {
-  def opt(key: String): Option[Any] = m.get(key) match {
-    case Some(null) => None
-    case other      => other
+  private[this] val read = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** Keys looked up so far, present or absent. */
+  def keysRead: Set[String] = read.asScala.toSet
+
+  def opt(key: String): Option[Any] = {
+    read.add(key)
+    m.get(key) match {
+      case Some(null) => None
+      case other      => other
+    }
   }
   def str(key: String): Option[String] = opt(key).map(_.toString).filter(_.nonEmpty)
-  def reqStr(key: String, err: String): String =
-    str(key).getOrElse(throw new IllegalArgumentException(err))
+  def str(key: String, default: String): String = str(key).getOrElse(default)
+  def reqStr(key: String, err: String = ""): String =
+    str(key).getOrElse(throw new IllegalArgumentException(
+      if (err.nonEmpty) err else s"missing required param '$key'"))
   def sub(key: String): Option[Conf] = opt(key).collect {
     case jm: java.util.Map[_, _] => Conf(Conf.toScala(jm))
     case sm: Map[_, _]           => Conf(sm.asInstanceOf[Map[String, Any]])
   }
-  def bool(key: String, default: Boolean): Boolean =
-    opt(key).map(_.toString.toBoolean).getOrElse(default)
+
+  /** An integer in [`min`, `max`]. */
+  def long(key: String, min: Long, max: Long = Long.MaxValue): Option[Long] =
+    str(key).map { s =>
+      val v =
+        try s.toLong
+        catch { case _: NumberFormatException => throw new IllegalArgumentException(
+          s"$key must be ${Conf.integer(min)}, got '$s'") }
+      if (v < min) throw new IllegalArgumentException(s"$key must be >= $min, got $v")
+      if (v > max) throw new IllegalArgumentException(s"$key must be <= $max, got $v")
+      v
+    }
+  def int(key: String, min: Int): Option[Int] =
+    long(key, min, Int.MaxValue).map(_.toInt)
+
+  /** A number in [`lo`, `hi`] (NaN is out of range). */
+  def double(key: String, lo: Double, hi: Double): Option[Double] =
+    str(key).map { s =>
+      val range = s"[${Conf.num(lo)}, ${Conf.num(hi)}]"
+      val v =
+        try s.toDouble
+        catch { case _: NumberFormatException => throw new IllegalArgumentException(
+          s"$key must be a number in $range, got '$s'") }
+      if (!(v >= lo && v <= hi))
+        throw new IllegalArgumentException(s"$key must be in $range, got $v")
+      v
+    }
+
+  /** `true` or `false`, in any letter case; anything else fails. */
+  def bool(key: String): Option[Boolean] = str(key).map { s =>
+    s.toLowerCase match {
+      case "true"  => true
+      case "false" => false
+      case _ => throw new IllegalArgumentException(
+        s"$key must be true or false, got '$s'")
+    }
+  }
+
+  /** A list of strings; a scalar where a list belongs fails. */
+  def strList(key: String): Option[Seq[String]] = opt(key).map {
+    case l: Seq[_] => l.map(_.toString)
+    case other => throw new IllegalArgumentException(
+      s"$key must be a list, got '$other'")
+  }
 }
 
 object Conf {
   val empty: Conf = Conf(Map.empty)
+  private def integer(min: Long): String = min match {
+    case 1L => "a positive integer"
+    case 0L => "a non-negative integer"
+    case m  => s"an integer >= $m"
+  }
+  private def num(d: Double): String = if (d.isWhole) d.toLong.toString else d.toString
   private[config] def toScala(jm: java.util.Map[_, _]): Map[String, Any] =
     jm.asScala.map { case (k, v) => k.toString -> convert(v) }.toMap
   private def convert(v: Any): Any = v match {

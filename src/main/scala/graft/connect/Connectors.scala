@@ -98,10 +98,17 @@ object Sinks {
       throw new IllegalArgumentException(
         "DataFrame to write must have a 'value' column.")
 
+  /** The sink types each mode accepts — the arms of [[writeBatch]] and
+    * [[startStream]] below; `Pipeline.build()` checks a declared sink
+    * against these, so keep them in step with the arms.
+    */
+  val BatchTypes  = Set("console", "parquet", "csv", "json", "orc", "noop", "kafka")
+  val StreamTypes = Set("console", "memory", "parquet", "noop", "kafka", "foreach_batch")
+
   def writeBatch(df: DataFrame, comp: ComponentConfig): Unit =
     comp.componentType.toLowerCase match {
       case "console" =>
-        df.show(numRows = comp.config.str("num_rows").map(_.toInt).getOrElse(20),
+        df.show(numRows = comp.config.int("num_rows", min = 0).getOrElse(20),
                 truncate = false)
       case fmt @ ("parquet" | "csv" | "json" | "orc") =>
         val path = comp.config.reqStr("path", s"Sink '$fmt' requires a 'path'.")

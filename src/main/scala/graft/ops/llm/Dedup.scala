@@ -1061,11 +1061,13 @@ object Dedup extends QueryPack {
                                     maxRounds: Int = 100): DataFrame = {
     import pairs.sparkSession.implicits._
     val spark = pairs.sparkSession
+    // read before the first pin, so a malformed value leaks nothing
+    val localMax = graft.state.Materialize.longConf(spark, CcLocalEdgeMaxKey,
+      200000L, "an edge count (long; 0 forces the distributed contraction)")
     var e = pairs.select($"d1".as("u"), $"d2".as("v"))
       .where($"u" =!= $"v").distinct()
       .transform(graft.state.Materialize.pin(_, Policy.Always))
     val nEdges = e.count()
-    val localMax = spark.conf.get(CcLocalEdgeMaxKey, "200000").toLong
     if (nEdges <= localMax) {
       val collected = e.select($"u", $"v").as[(Long, Long)].collect()
       // the edge pin is DEAD once collected — release it (blocks, and in
@@ -1145,10 +1147,11 @@ object Dedup extends QueryPack {
     *  1. [[IvfCellsKey]] set → that K (explicit always wins — the probe
     *     and any deployment that has already sized its index set this).
     *  2. else K = max([[IvfMinCells]], ceil(rows / target)) where
-    *     target = [[IvfTargetCellRowsKey]] (conf, else
-    *     [[IvfTargetCellRowsEnv]], else 2^16); target ≤ 0 pins K to the
-    *     floor. The row count is ONE metadata-cheap count per distinct
-    *     corpus plan, memoized per session.
+    *     target = [[IvfTargetCellRowsKey]] (default 2^16); target ≤ 0
+    *     pins K to the floor. A malformed value of either key fails
+    *     naming the key and the value. The row count is ONE
+    *     metadata-cheap count per distinct corpus plan, memoized per
+    *     session.
     *
     * The centroid planes are the same md5 formula at every K
     * ([[ivfCentroids]]), so K = 4 reproduces the gate fixture
@@ -1163,7 +1166,6 @@ object Dedup extends QueryPack {
     */
   val IvfCellsKey = "spark.graft.ivf.cells"
   val IvfTargetCellRowsKey = "spark.graft.ivf.targetCellRows"
-  val IvfTargetCellRowsEnv = "SPARK_GRAFT_IVF_TARGET_CELL_ROWS"
 
   /** Autopilot target occupancy (rows per cell): 2^16 × 64-dim doubles
     * ≈ 34 MB of vectors per cell — one executor task's working set for
@@ -1186,39 +1188,29 @@ object Dedup extends QueryPack {
     */
   private[graft] def ivfCellsFor(corpus: DataFrame): Int = {
     val spark = corpus.sparkSession
-    val conf = spark.conf
-    def loudLong(src: String, raw: String, what: String): Long =
-      try raw.trim.toLong catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"$src: expected $what (a long), got '$raw'")
-      }
-    conf.getOption(IvfCellsKey) match {
-      case Some(raw) =>
-        val k = loudLong(IvfCellsKey, raw, "a cell count >= 1")
-        require(k >= 1 && k <= Int.MaxValue,
-          s"$IvfCellsKey must be in [1, ${Int.MaxValue}], got $k")
+    if (spark.conf.getOption(IvfCellsKey).nonEmpty) {
+      val k = graft.state.Materialize.longConf(spark, IvfCellsKey, IvfMinCells,
+        "a cell count >= 1 (a long)")
+      require(k >= 1 && k <= Int.MaxValue,
+        s"$IvfCellsKey must be in [1, ${Int.MaxValue}], got $k")
+      k.toInt
+    } else {
+      val target = graft.state.Materialize.longConf(spark, IvfTargetCellRowsKey,
+        IvfTargetCellRowsDefault,
+        "a target rows-per-cell (a long; <= 0 pins K to the floor)")
+      if (target <= 0) IvfMinCells
+      else {
+        // memoized per CANONICALIZED logical plan: two references to
+        // the same corpus — e.g. the cells frame and the probe frame of
+        // one search — must resolve the SAME K, and the count must not
+        // re-run per reference
+        val n = graft.state.Materialize.memo(spark, "ivf_count",
+          corpus.queryExecution.logical.canonicalized)(_ => corpus.count())
+        val k = math.max(IvfMinCells.toLong, (n + target - 1) / target)
+        require(k <= Int.MaxValue,
+          s"IVF cell count $k overflows Int (rows=$n, target=$target)")
         k.toInt
-      case None =>
-        val (src, raw) = conf.getOption(IvfTargetCellRowsKey)
-          .map((IvfTargetCellRowsKey, _))
-          .orElse(sys.env.get(IvfTargetCellRowsEnv)
-            .map((IvfTargetCellRowsEnv, _)))
-          .getOrElse(("default", IvfTargetCellRowsDefault.toString))
-        val target = loudLong(src, raw,
-          "a target rows-per-cell (<= 0 pins K to the floor)")
-        if (target <= 0) IvfMinCells
-        else {
-          // memoized per CANONICALIZED logical plan: two references to
-          // the same corpus — e.g. the cells frame and the probe frame of
-          // one search — must resolve the SAME K, and the count must not
-          // re-run per reference
-          val n = graft.state.Materialize.memo(spark, "ivf_count",
-            corpus.queryExecution.logical.canonicalized)(_ => corpus.count())
-          val k = math.max(IvfMinCells.toLong, (n + target - 1) / target)
-          require(k <= Int.MaxValue,
-            s"IVF cell count $k overflows Int (rows=$n, target=$target)")
-          k.toInt
-        }
+      }
     }
   }
 

@@ -20,10 +20,7 @@ import graft.state.Materialize.Policy
   * `text`). `keep: first` semantics come from dropDuplicates.
   */
 final class ExactDedupProcessor(params: Conf) extends Transform {
-  private val cols: Seq[String] = params.opt("columns") match {
-    case Some(l: List[_]) => l.map(_.toString)
-    case _                => Seq("content_hash")
-  }
+  private val cols: Seq[String] = params.strList("columns").getOrElse(Seq("content_hash"))
   def apply(df: DataFrame): DataFrame = {
     val withHash =
       if (cols == Seq("content_hash") && !df.columns.contains("content_hash"))
@@ -37,7 +34,7 @@ final class ExactDedupProcessor(params: Conf) extends Transform {
   * from a configurable text column.
   */
 final class TokenStatsProcessor(params: Conf) extends Transform {
-  private val textCol = params.str("text_column").getOrElse("text")
+  private val textCol = params.str("text_column", "text")
   // single-space split, NOT "\\s+": must agree with the gated text
   // queries (graft.ops.llm.TextStats) and their DuckDB string_split
   // oracles, or the pipeline and query surfaces disagree on n_tokens
@@ -56,7 +53,7 @@ final class TokenStatsProcessor(params: Conf) extends Transform {
 final class NfcNormalizeProcessor(spark: org.apache.spark.sql.SparkSession,
                                   params: Conf) extends Transform {
   graft.functions.GraftFunctions.register(spark)
-  private val textCol = params.str("text_column").getOrElse("text")
+  private val textCol = params.str("text_column", "text")
   // call_function, not expr-string interpolation: a column name needing
   // quoting (spaces, dots, backticks) must resolve, not break the parser
   def apply(df: DataFrame): DataFrame =
@@ -88,14 +85,8 @@ final class NfcNormalizeProcessor(spark: org.apache.spark.sql.SparkSession,
   *     well-formedness without carrying the byte slice itself.
   */
 final class CdcChunkProcessor(params: Conf) extends Transform {
-  private val textCol = params.str("text_column").getOrElse("text")
-  private val idCol   = params.str("id_column").getOrElse("doc_id")
-  // a typo'd/unsupported param must fail loudly at build time, not be
-  // silently ignored (a configured knob with no effect is a config trap)
-  private val unknown = params.m.keySet -- Set("text_column", "id_column")
-  require(unknown.isEmpty,
-    s"cdc_chunk: unsupported params ${unknown.toSeq.sorted.mkString(", ")} " +
-    "(supported: text_column, id_column)")
+  private val textCol = params.str("text_column", "text")
+  private val idCol   = params.str("id_column", "doc_id")
   def apply(df: DataFrame): DataFrame =
     graft.ops.llm.Dedup.cdcChunkRows(
         df.select(col(idCol).as("doc_id"), col(textCol).as("text")))
@@ -105,9 +96,9 @@ final class CdcChunkProcessor(params: Conf) extends Transform {
 
 /** C39 quality filter: keep documents within configured token bounds. */
 final class QualityFilterProcessor(params: Conf) extends Transform {
-  private val textCol = params.str("text_column").getOrElse("text")
-  private val minTokens = params.str("min_tokens").map(_.toInt).getOrElse(1)
-  private val maxTokens = params.str("max_tokens").map(_.toInt).getOrElse(Int.MaxValue)
+  private val textCol = params.str("text_column", "text")
+  private val minTokens = params.int("min_tokens", min = 0).getOrElse(1)
+  private val maxTokens = params.int("max_tokens", min = 0).getOrElse(Int.MaxValue)
   def apply(df: DataFrame): DataFrame = {
     val n = size(split(col(textCol), " ")) // same tokenization as TextStats
     df.filter(n >= minTokens && n <= maxTokens)
@@ -126,17 +117,10 @@ final class QualityFilterProcessor(params: Conf) extends Transform {
   * otherwise become unbounded cross-batch state).
   */
 final class DecontaminateProcessor(params: Conf) extends Transform {
-  private val benchPath = params.str("benchmark_path").getOrElse(
-    throw new IllegalArgumentException(
-      "decontaminate needs a 'benchmark_path' param"))
-  private val idCol   = params.str("id_column").getOrElse("doc_id")
-  private val textCol = params.str("text_column").getOrElse("text")
-  private val maxPpm  = params.str("max_ppm").map(_.toLong).getOrElse(100000L)
-  private val unknown = params.m.keySet --
-    Set("benchmark_path", "id_column", "text_column", "max_ppm")
-  require(unknown.isEmpty,
-    s"decontaminate: unsupported params ${unknown.toSeq.sorted.mkString(", ")} " +
-    "(supported: benchmark_path, id_column, text_column, max_ppm)")
+  private val benchPath = params.reqStr("benchmark_path")
+  private val idCol   = params.str("id_column", "doc_id")
+  private val textCol = params.str("text_column", "text")
+  private val maxPpm  = params.long("max_ppm", min = 0).getOrElse(100000L)
   def apply(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val bench = graft.ops.llm.Dedup.shinglesFrom(
@@ -161,12 +145,8 @@ final class DecontaminateProcessor(params: Conf) extends Transform {
   * streaming tokenization jobs.
   */
 final class SpanCorruptProcessor(params: Conf) extends Transform {
-  private val idCol   = params.str("id_column").getOrElse("doc_id")
-  private val textCol = params.str("text_column").getOrElse("text")
-  private val unknown = params.m.keySet -- Set("id_column", "text_column")
-  require(unknown.isEmpty,
-    s"span_corrupt: unsupported params ${unknown.toSeq.sorted.mkString(", ")} " +
-    "(supported: id_column, text_column)")
+  private val idCol   = params.str("id_column", "doc_id")
+  private val textCol = params.str("text_column", "text")
   def apply(df: DataFrame): DataFrame = {
     val texts = graft.ops.llm.TextStats.spanCorruptTextsFrom(
         df.select(col(idCol).as("doc_id"), col(textCol).as("text")))
@@ -215,15 +195,9 @@ final class SpanCorruptProcessor(params: Conf) extends Transform {
   * duplicate ids then silently mis-pair, the caller's contract.
   */
 final class NearDedupProcessor(params: Conf) extends Transform {
-  private val idCol   = params.str("id_column").getOrElse("doc_id")
-  private val textCol = params.str("text_column").getOrElse("text")
-  private val census  =
-    !EmbeddingParams.boolFlag(params, "near_dedup", "assume_unique_ids")
-  private val unknown = params.m.keySet --
-    Set("id_column", "text_column", "assume_unique_ids")
-  require(unknown.isEmpty,
-    s"near_dedup: unsupported params ${unknown.toSeq.sorted.mkString(", ")} " +
-    "(supported: id_column, text_column, assume_unique_ids)")
+  private val idCol   = params.str("id_column", "doc_id")
+  private val textCol = params.str("text_column", "text")
+  private val census  = !params.bool("assume_unique_ids").getOrElse(false)
   def apply(df: DataFrame): DataFrame = {
     IdGuards.requireIntegral(df, idCol, "near_dedup")
     // plain ANSI cast, deliberately NOT try_cast: under ANSI (the
@@ -393,60 +367,6 @@ private[pipeline] object IdGuards {
   }
 }
 
-/** Shared typed-param parsing for the embedding processors — one
-  * spelling of the bounds and messages (sem_dedup and ann_topk first
-  * carried verbatim copies; self-review r12 pass 4).
-  */
-private[pipeline] object EmbeddingParams {
-  def threshold(params: Conf, op: String, default: Double): Double =
-    params.str("threshold").map { s =>
-      val t =
-        try s.toDouble
-        catch { case _: NumberFormatException =>
-          throw new IllegalArgumentException(
-            s"$op: threshold must be a number in [-1, 1], got '$s'") }
-      require(t >= -1.0 && t <= 1.0,
-        s"$op: threshold must be in [-1, 1], got $t")
-      t
-    }.getOrElse(default)
-
-  /** Named fail-fast boolean: Conf.bool's bare String.toBoolean throws
-    * 'For input string: "yes"' with no op or param name — every other
-    * knob in this file names both (self-review r13 pass 2).
-    */
-  def boolFlag(params: Conf, op: String, key: String): Boolean =
-    params.str(key).map(_.toLowerCase) match {
-      case Some("true")  => true
-      case Some("false") => false
-      case None          => false
-      case Some(other) => throw new IllegalArgumentException(
-        s"$op: $key must be true or false, got '$other'")
-    }
-
-  def positiveInt(params: Conf, op: String, key: String, default: Int): Int =
-    params.str(key).map { s =>
-      val v =
-        try s.toInt
-        catch { case _: NumberFormatException =>
-          throw new IllegalArgumentException(
-            s"$op: $key must be a positive integer, got '$s'") }
-      require(v >= 1, s"$op: $key must be >= 1, got $v")
-      v
-    }.getOrElse(default)
-
-  /** Probe breadth for the embedding stages: 1 (default, single-probe)
-    * to the quantizer's cell count (= exhaustive). The floor and the
-    * integer format stay FAIL-FAST at config parse; the `<= K` cap
-    * moved to the engine ([[graft.ops.llm.Dedup.embeddingProbeEdges]])
-    * where the corpus is known, because K became corpus-scaled in r17
-    * (VERDICT r16 #1) and no longer exists at parse time — a breadth
-    * beyond the resolved K still fails loudly there rather than
-    * silently behaving as exhaustive.
-    */
-  def nprobe(params: Conf, op: String): Int =
-    positiveInt(params, op, "nprobe", 1)
-}
-
 /** Shared embedding ingestion for the pipeline's C37/C38 stages:
   * normalizes any `(id, embedding)` frame to the `(vec_id, v, nrm)`
   * corpus shape the gate-proven cores consume, with all three
@@ -549,19 +469,11 @@ private[pipeline] object EmbeddingStage {
   * anti-join evaluates every embedding).
   */
 final class SemDedupProcessor(params: Conf) extends Transform {
-  private val idCol  = params.str("id_column").getOrElse("vec_id")
-  private val embCol = params.str("embedding_column").getOrElse("embedding")
-  private val thr: Double = EmbeddingParams.threshold(params, "sem_dedup", 0.45)
-  private val nprobe: Int = EmbeddingParams.nprobe(params, "sem_dedup")
-  private val census =
-    !EmbeddingParams.boolFlag(params, "sem_dedup", "assume_unique_ids")
-  private val unknown =
-    params.m.keySet -- Set("id_column", "embedding_column", "threshold",
-      "nprobe", "assume_unique_ids")
-  require(unknown.isEmpty,
-    s"sem_dedup: unsupported params ${unknown.toSeq.sorted.mkString(", ")} " +
-    "(supported: id_column, embedding_column, threshold, nprobe, " +
-    "assume_unique_ids)")
+  private val idCol  = params.str("id_column", "vec_id")
+  private val embCol = params.str("embedding_column", "embedding")
+  private val thr    = params.double("threshold", -1.0, 1.0).getOrElse(0.45)
+  private val nprobe = params.int("nprobe", min = 1).getOrElse(1)
+  private val census = !params.bool("assume_unique_ids").getOrElse(false)
   def apply(df: DataFrame): DataFrame = {
     val corpus = EmbeddingStage.corpusFrom(df, idCol, embCol, "sem_dedup", census)
     // ONE pair-engine execution: the engine emits each member's
@@ -640,20 +552,11 @@ final class SemDedupProcessor(params: Conf) extends Transform {
   * embeddings of the quantizer's dimension with positive finite norm.
   */
 final class SemDedupClustersProcessor(params: Conf) extends Transform {
-  private val idCol  = params.str("id_column").getOrElse("vec_id")
-  private val embCol = params.str("embedding_column").getOrElse("embedding")
-  private val thr: Double =
-    EmbeddingParams.threshold(params, "sem_dedup_clusters", 0.45)
-  private val nprobe: Int = EmbeddingParams.nprobe(params, "sem_dedup_clusters")
-  private val census =
-    !EmbeddingParams.boolFlag(params, "sem_dedup_clusters", "assume_unique_ids")
-  private val unknown =
-    params.m.keySet -- Set("id_column", "embedding_column", "threshold",
-      "nprobe", "assume_unique_ids")
-  require(unknown.isEmpty,
-    s"sem_dedup_clusters: unsupported params ${unknown.toSeq.sorted.mkString(", ")} " +
-    "(supported: id_column, embedding_column, threshold, nprobe, " +
-    "assume_unique_ids)")
+  private val idCol  = params.str("id_column", "vec_id")
+  private val embCol = params.str("embedding_column", "embedding")
+  private val thr    = params.double("threshold", -1.0, 1.0).getOrElse(0.45)
+  private val nprobe = params.int("nprobe", min = 1).getOrElse(1)
+  private val census = !params.bool("assume_unique_ids").getOrElse(false)
   /** Ledger of prior invocations' outputs whose drop-set pins are still
     * held, newest first. Each output carries an [[Observation]] (a
     * CollectMetrics node stitched into the returned anti-join), so this
@@ -863,27 +766,19 @@ object SemDedupClustersProcessor {
   * output" (ADVICE r12).
   */
 final class AnnTopKProcessor(params: Conf) extends Transform {
-  private val idCol  = params.str("id_column").getOrElse("vec_id")
-  private val embCol = params.str("embedding_column").getOrElse("embedding")
-  private val outCol = params.str("output_column").getOrElse("ann_topk")
-  private val k: Int = EmbeddingParams.positiveInt(params, "ann_topk", "k", 5)
+  private val idCol  = params.str("id_column", "vec_id")
+  private val embCol = params.str("embedding_column", "embedding")
+  private val outCol = params.str("output_column", "ann_topk")
+  private val k      = params.int("k", min = 1).getOrElse(5)
   // default = NO similarity floor (−∞, the llm_ann_annotate_mp gate's
   // spelling): all candidates rank. A −1.0 default is NOT equivalent —
   // IEEE rounding can place a near-antipodal cosine one ulp below −1.0,
   // which `cos >= -1.0` silently drops while the gate ranks it
   // (self-review r13 pass 2); user-supplied floors stay bounded [−1, 1]
-  private val thr: Double =
-    EmbeddingParams.threshold(params, "ann_topk", Double.NegativeInfinity)
-  private val nprobe: Int = EmbeddingParams.nprobe(params, "ann_topk")
-  private val census =
-    !EmbeddingParams.boolFlag(params, "ann_topk", "assume_unique_ids")
-  private val unknown = params.m.keySet --
-    Set("id_column", "embedding_column", "output_column", "k", "threshold",
-        "nprobe", "assume_unique_ids")
-  require(unknown.isEmpty,
-    s"ann_topk: unsupported params ${unknown.toSeq.sorted.mkString(", ")} " +
-    "(supported: id_column, embedding_column, output_column, k, threshold, " +
-    "nprobe, assume_unique_ids)")
+  private val thr =
+    params.double("threshold", -1.0, 1.0).getOrElse(Double.NegativeInfinity)
+  private val nprobe = params.int("nprobe", min = 1).getOrElse(1)
+  private val census = !params.bool("assume_unique_ids").getOrElse(false)
   def apply(df: DataFrame): DataFrame = {
     require(!df.columns.exists(_.equalsIgnoreCase(outCol)),
       s"ann_topk: output_column '$outCol' already exists in the input — " +
@@ -904,11 +799,7 @@ final class AnnTopKProcessor(params: Conf) extends Transform {
   * scan-rate at 100 TB.
   */
 final class PiiScrubProcessor(params: Conf) extends Transform {
-  private val textCol = params.str("text_column").getOrElse("text")
-  private val unknown = params.m.keySet -- Set("text_column")
-  require(unknown.isEmpty,
-    s"pii_scrub: unsupported params ${unknown.toSeq.sorted.mkString(", ")} " +
-    "(supported: text_column)")
+  private val textCol = params.str("text_column", "text")
   def apply(df: DataFrame): DataFrame = {
     val email = graft.ops.llm.TextStats.PiiEmailPattern
     val phone = graft.ops.llm.TextStats.PiiPhonePattern
@@ -933,18 +824,9 @@ final class PiiScrubProcessor(params: Conf) extends Transform {
   * batch/foreachBatch-legal.
   */
 final class LangIdProcessor(params: Conf) extends Transform {
-  private val idCol   = params.str("id_column").getOrElse("doc_id")
-  private val textCol = params.str("text_column").getOrElse("text")
-  private val keep: Option[Set[String]] = params.opt("keep") match {
-    case Some(l: List[_]) => Some(l.map(_.toString).toSet)
-    case Some(other) => throw new IllegalArgumentException(
-      s"lang_id: 'keep' must be a list of language codes, got $other")
-    case None => None
-  }
-  private val unknown = params.m.keySet -- Set("id_column", "text_column", "keep")
-  require(unknown.isEmpty,
-    s"lang_id: unsupported params ${unknown.toSeq.sorted.mkString(", ")} " +
-    "(supported: id_column, text_column, keep)")
+  private val idCol   = params.str("id_column", "doc_id")
+  private val textCol = params.str("text_column", "text")
+  private val keep    = params.strList("keep").map(_.toSet)
   def apply(df: DataFrame): DataFrame = {
     // reserved internal name: joining "plang" directly is ambiguous the
     // moment the input carries its own plang column (a prior labeler)
@@ -967,12 +849,8 @@ final class LangIdProcessor(params: Conf) extends Transform {
   * streaming-legal.
   */
 final class QualityScoreProcessor(params: Conf) extends Transform {
-  private val textCol  = params.str("text_column").getOrElse("text")
-  private val minScore = params.str("min_score").map(_.toInt)
-  private val unknown  = params.m.keySet -- Set("text_column", "min_score")
-  require(unknown.isEmpty,
-    s"quality_score: unsupported params ${unknown.toSeq.sorted.mkString(", ")} " +
-    "(supported: text_column, min_score)")
+  private val textCol  = params.str("text_column", "text")
+  private val minScore = params.int("min_score", min = 0)
   def apply(df: DataFrame): DataFrame = {
     val scored = graft.ops.llm.TextStats.withQualityScore(
       df, col(textCol), length(col(textCol)).cast("long"))
@@ -988,14 +866,11 @@ final class QualityScoreProcessor(params: Conf) extends Transform {
   * streaming-legal, scan-rate at 100 TB.
   */
 final class GopherFilterProcessor(params: Conf) extends Transform {
-  private val textCol = params.str("text_column").getOrElse("text")
-  private val mode    = params.str("mode").getOrElse("filter")
-  require(Set("filter", "annotate")(mode),
-    s"gopher_filter: unknown mode '$mode' (supported: filter, annotate)")
-  private val unknown = params.m.keySet -- Set("text_column", "mode")
-  require(unknown.isEmpty,
-    s"gopher_filter: unsupported params ${unknown.toSeq.sorted.mkString(", ")} " +
-    "(supported: text_column, mode)")
+  private val textCol = params.str("text_column", "text")
+  private val mode    = params.str("mode", "filter")
+  if (!Set("filter", "annotate")(mode))
+    throw new IllegalArgumentException(
+      s"unknown mode '$mode' (supported: filter, annotate)")
   def apply(df: DataFrame): DataFrame =
     // filter mode is a pure row predicate built WITHOUT materializing
     // the working columns, so input columns colliding with the rule

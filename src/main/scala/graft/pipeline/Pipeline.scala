@@ -51,12 +51,8 @@ final class Pipeline(
     // Sink config is validated at start/write time by the factory; probe
     // the type now — PER MODE — so an unsupported sink fails at build,
     // like the reference.
-    val validSinks =
-      if (streaming) Set("kafka", "console", "memory", "parquet", "noop",
-                         "foreach_batch")
-      else Set("kafka", "console", "parquet", "csv", "json", "orc", "noop")
     val t = config.sink.componentType.toLowerCase
-    if (!validSinks.contains(t))
+    if (!(if (streaming) Sinks.StreamTypes else Sinks.BatchTypes)(t))
       throw new IllegalArgumentException(s"Unsupported writer type: $t")
     sinkReady = true
     this

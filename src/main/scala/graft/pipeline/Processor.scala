@@ -55,8 +55,7 @@ final class UppercaseValueProcessor(params: Conf = Conf.empty) extends Transform
   * required column is absent — the hard form of the reference's warn-path.
   */
 final class RequireColumnProcessor(params: Conf) extends Processor {
-  private val column = params.reqStr("column",
-    "RequireColumnProcessor needs a 'column' param")
+  private val column = params.reqStr("column")
   def process(df: DataFrame): Option[DataFrame] =
     if (df.columns.contains(column)) Some(df) else None
 }
@@ -65,11 +64,8 @@ final class RequireColumnProcessor(params: Conf) extends Processor {
   * parameterized processor (params arrive typed, not via reflection).
   */
 final class SelectExprProcessor(params: Conf) extends Transform {
-  private val exprs: Seq[String] = params.opt("exprs") match {
-    case Some(l: List[_]) => l.map(_.toString)
-    case _ => throw new IllegalArgumentException(
-      "SelectExprProcessor needs an 'exprs' list param")
-  }
+  private val exprs: Seq[String] = params.strList("exprs").getOrElse(
+    throw new IllegalArgumentException("missing required param 'exprs' (a list)"))
   def apply(df: DataFrame): DataFrame = df.selectExpr(exprs: _*)
 }
 
@@ -78,6 +74,12 @@ final class SelectExprProcessor(params: Conf) extends Transform {
   * REGISTRY is the designed path (explicit, typo-safe, no classpath
   * surprises) with `Class.forName` kept as the compatibility fallback for
   * user classes — constructor `(Conf)` or no-arg.
+  *
+  * A registered id gets the one param contract: its factory reads params
+  * through [[Conf]]'s getters, any `IllegalArgumentException` it throws is
+  * prefixed with the id, and a supplied key no getter read fails as
+  * `<id>: unsupported params …`. A class-path processor receives its
+  * params unchecked.
   */
 object ProcessorRegistry {
   type Factory = (SparkSession, Conf) => Processor
@@ -102,12 +104,9 @@ object ProcessorRegistry {
     "gopher_filter"  -> ((_, p) => new GopherFilterProcessor(p)),
     "sem_dedup"      -> ((_, p) => new SemDedupProcessor(p)),
     "sem_dedup_clusters" -> ((_, p) => new SemDedupClustersProcessor(p)),
-    "ann_topk"       -> ((_, p) => new AnnTopKProcessor(p)),
-    // reference-style full class paths, translated
-    "graft.pipeline.NoOpProcessor"           -> ((_, p) => new NoOpProcessor(p)),
-    "graft.pipeline.UppercaseValueProcessor" -> ((_, p) => new UppercaseValueProcessor(p)),
-    "graft.pipeline.RequireColumnProcessor"  -> ((_, p) => new RequireColumnProcessor(p)),
-    "graft.pipeline.SelectExprProcessor"     -> ((_, p) => new SelectExprProcessor(p)))
+    "ann_topk"       -> ((_, p) => new AnnTopKProcessor(p)))
+
+  private[pipeline] def builtinIds: Set[String] = builtin.keySet
 
   private val registry = scala.collection.mutable.Map[String, Factory](builtin.toSeq: _*)
 
@@ -116,8 +115,22 @@ object ProcessorRegistry {
 
   def resolve(spark: SparkSession, className: String, params: Conf): Processor =
     synchronized(registry.get(className)) match {
-      case Some(f) => f(spark, params)
-      case None    => loadClass(className, params)
+      case Some(f) =>
+        val tracked = Conf(params.m) // a fresh record of the keys read
+        val proc =
+          try f(spark, tracked)
+          catch { case e: IllegalArgumentException =>
+            throw new IllegalArgumentException(s"$className: ${e.getMessage}", e) }
+        val read = tracked.keysRead
+        val unknown = params.m.keySet -- read
+        if (unknown.nonEmpty) {
+          def list(ks: Set[String]) =
+            if (ks.isEmpty) "none" else ks.toSeq.sorted.mkString(", ")
+          throw new IllegalArgumentException(
+            s"$className: unsupported params ${list(unknown)} (supported: ${list(read)})")
+        }
+        proc
+      case None => loadClass(className, params)
     }
 
   /** `Class.forName` fallback (the importlib twin). */

@@ -140,6 +140,18 @@ class GraphSpec extends SparkSpec {
     }
   }
 
+  test("starComponents: a malformed localEdgeMax fails naming the key " +
+       "and the value, not a bare NumberFormatException") {
+    import spark.implicits._
+    val e = withConf("spark.graft.cc.localEdgeMax" -> "lots") {
+      intercept[IllegalArgumentException] {
+        graft.ops.llm.Dedup.starComponents(Seq((1L, 2L)).toDF("d1", "d2"))
+      }
+    }
+    assert(e.getMessage.contains("spark.graft.cc.localEdgeMax"), e.getMessage)
+    assert(e.getMessage.contains("lots"), e.getMessage)
+  }
+
   test("directed PageRank with dangling mass matches a driver-side " +
        "integer replica exactly (ranks AND residuals), and the dangling " +
        "redistribution term provably changes the answer") {

@@ -2,7 +2,9 @@ package graft.pipeline
 
 import graft.SparkSpec
 import graft.config.Conf
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Reproduces the reference's processor-level asserted scenarios:
   *  - golden uppercase table (…/processors/custom_processors.py:71-93)
@@ -213,6 +215,67 @@ class ProcessorSpec extends SparkSpec {
     val nullRow = out.where($"doc_id" === 2L).head()
     assert(nullRow.getAs[String]("text") == null)
     assert(nullRow.getAs[Long]("n_spans") === 0L)
+  }
+
+  /** Minimal valid params for every registered id. */
+  private val minimalParams: Map[String, Map[String, Any]] = Map(
+    "noop" -> Map(), "uppercase" -> Map(),
+    "require_column" -> Map("column" -> "value"),
+    "select_expr" -> Map("exprs" -> List("value")),
+    "dedup_exact" -> Map(), "token_stats" -> Map(), "quality_filter" -> Map(),
+    "nfc_normalize" -> Map(), "cdc_chunks" -> Map(),
+    "decontaminate" -> Map("benchmark_path" -> "bench.parquet"),
+    "span_corrupt" -> Map(), "near_dedup" -> Map(), "pii_scrub" -> Map(),
+    "lang_id" -> Map(), "quality_score" -> Map(), "gopher_filter" -> Map(),
+    "sem_dedup" -> Map(), "sem_dedup_clusters" -> Map(), "ann_topk" -> Map())
+
+  test("every registry id rejects an unknown param at resolve, naming the " +
+       "id and the key") {
+    assert(minimalParams.keySet === ProcessorRegistry.builtinIds)
+    for ((id, params) <- minimalParams) {
+      ProcessorRegistry.resolve(spark, id, Conf(params))
+      val e = intercept[IllegalArgumentException] {
+        ProcessorRegistry.resolve(spark, id, Conf(params + ("bogus_key" -> "x")))
+      }
+      for (part <- Seq(s"$id:", "bogus_key", "unsupported params"))
+        assert(e.getMessage.contains(part), s"$id: ${e.getMessage}")
+    }
+  }
+
+  test("a malformed param value fails at resolve, naming the id and the key") {
+    val cases = Seq(
+      ("quality_filter", "min_tokens", "abc"),
+      ("decontaminate", "max_ppm", "x"),
+      ("quality_score", "min_score", "high"),
+      ("dedup_exact", "columns", "h"))
+    for ((id, key, value) <- cases) {
+      val e = intercept[IllegalArgumentException] {
+        ProcessorRegistry.resolve(spark, id, Conf(minimalParams(id) + (key -> value)))
+      }
+      assert(e.getMessage.startsWith(s"$id: "), e.getMessage)
+      assert(e.getMessage.contains(key) && e.getMessage.contains(value), e.getMessage)
+    }
+  }
+
+  test("no params.m access or unsupported-params check in src/main outside " +
+       "the registry") {
+    // every processor reads its params through Conf's getters and
+    // ProcessorRegistry.resolve is the one unknown-key check; comment
+    // lines are skipped
+    val copy = "params\\.m\\b|unsupported params".r
+    def copies(p: java.nio.file.Path) = Files.readAllLines(p).asScala.exists { l =>
+      val t = l.trim
+      !t.startsWith("*") && !t.startsWith("/") && copy.findFirstIn(l).nonEmpty
+    }
+    val registry = Paths.get("src/main/scala/graft/pipeline/Processor.scala")
+    assert(copies(registry))
+    val files = Files.walk(Paths.get("src/main/scala"))
+    val offenders =
+      try files.iterator().asScala
+        .filter(p => p.toString.endsWith(".scala") && p != registry && copies(p))
+        .map(_.toString).toList
+      finally files.close()
+    assert(offenders.isEmpty)
   }
 }
 
